@@ -106,7 +106,7 @@ HEADLINE = [
     #                                    + ONE agg over SF-SCALED documents
     "q287_bpe_encode",                 # distinct-word agg + vocab-frame merge chain + broadcast-back
     # round-13 addition (new line, not a regression vs BENCH_r12):
-    "q299_webp_vp8_real_decode",       # pure-python VP8 key-frame decode inside mapInPandas —
+    "q299_webp_vp8_real_decode",       # libwebp VP8 key-frame decode inside mapInPandas —
     #                                    the codec family's first bench line (per-payload cost)
     # round-14 addition (new line, not a regression vs BENCH_r13):
     "q310_crawl_pipeline",             # composed WARC->HTTP/charset->HTML->canon->quality

@@ -1,10 +1,10 @@
 """AVIF real decode/encode through the SYSTEM libavif (ctypes seam).
 
-Unlike the WebP codecs (pure-python, operators/vp8.py + the VP8L
-decoder), AV1 still-image decoding is not reimplemented here — an AV1
-intra decoder (symbol-adaptive arithmetic coding, 60+ intra modes,
+Like WebP (system libwebp, operators/webp.py), AV1 still-image
+decoding is not reimplemented here — an AV1 intra decoder
+(symbol-adaptive arithmetic coding, 60+ intra modes,
 CDEF/loop-restoration) is far outside reasonable scope.  Instead this
-is the honest *system-codec* tier: the container ships libavif 0.11
+is the *system-codec* tier: the container ships libavif 0.11
 backed by dav1d/aom/rav1e, and this module binds it the way
 ``decode_real`` binds PIL — dlopen-guarded, version-gated (the ctypes
 struct offsets below are verified against the 0.11 ABI and refuse
@@ -21,7 +21,8 @@ round-trip random planes bit-exactly.
 Lossless lever: libavif's default min/max quantizer is 0, which is
 AV1's lossless mode — encoded YUV planes decode back bit-exactly, so
 fixtures get closed-form oracles exactly like the WebP family
-(q284/q299).  RGB conversion is the documented full-range BT.601
+(q284/q299, whose fixtures the in-repo encoders write and libwebp
+decodes).  RGB conversion is the documented full-range BT.601
 integer transform below (AVIF images default to full-range YUV).
 """
 

@@ -5,7 +5,7 @@ struct, per the format spec's base64Binary mapping
 (/root/reference/README.md:63 — base64Binary → parquet binary).
 
 The Spark-side plumbing (schema, partitioning, Arrow batch shape,
-mapInPandas signatures) is real and tested. Codecs come in three tiers:
+mapInPandas signatures) is real and tested. Codecs come in four tiers:
 
 - ``numpy_features`` / ``numpy_resize`` — REAL decoders for P6 PPM,
   24-bit BMP, 8-bit PNG (stdlib ``zlib`` inflate + numpy scanline
@@ -14,10 +14,12 @@ mapInPandas signatures) is real and tested. Codecs come in three tiers:
   selection + successive approximation, r12 — no codec library
   anywhere), so the bytes→pixels→features path genuinely runs in
   this container, compressed formats included;
+- system codecs through ctypes — WebP (lossless VP8L, lossy VP8 key
+  frames, animations composited here) decodes through libwebp
+  (``operators/webp.py``) and AVIF through libavif
+  (``operators/avif.py``); the in-repo encoders write their fixtures;
 - ``decode_real`` — the PIL seam for the remaining exotic formats
-  (AVIF/12-bit & arithmetic JPEG/...; WebP — lossless VP8L, lossy
-  VP8 key frames AND animations — decodes in-repo since r13),
-  import-guarded: raises
+  (12-bit & arithmetic JPEG/...), import-guarded: raises
   ``NotImplementedError`` with wiring guidance when PIL is absent;
 - ``stand_in_features`` — the deterministic byte-statistics fallback
   for payloads no available codec understands.
@@ -111,7 +113,7 @@ def decode_real(content: bytes, mime: str | None = None) -> list[float]:
     """Real image codec, import-guarded: PIL decode → (width, height,
     8×8 luminance grid) = a 66-dim feature, the classic average-hash
     shape. Raises NotImplementedError with wiring guidance when PIL is
-    absent (this container ships no codec libraries) — the mapInPandas
+    absent — the mapInPandas
     plumbing in ``extract_features`` is identical either way, so a
     cluster with PIL installed gets the real path with zero code change
     (pass ``codec=decode_real``)."""
@@ -2305,15 +2307,15 @@ def gif_animation_features(media: DataFrame, max_frames: int | None = None) -> D
 @_codec_quarantine
 def decode_webp_frames(content: bytes, max_frames: int | None = None):
     """Animated WebP → list of (duration_ms, HxWx3 uint8 RGB)
-    composited frames, NO codec library: VP8X feature check, ANIM/ANMF
-    chunk walk, per-frame decode through the in-repo VP8L (lossless)
-    and VP8 (lossy key-frame) codecs — mixed-codec animations are
-    legal and covered.  Composition: frames paste at their (2x-scaled)
-    offsets; alpha is dropped module-wide, so both blending modes
-    reduce to overwrite, and disposal-to-background restores the
-    canvas (ANIM background, alpha-dropped → black).  A still WebP
-    decodes as one zero-duration frame.  ``max_frames`` bounds decode
-    work per payload (the long-animation guard, as in
+    composited frames: VP8X feature check, ANIM/ANMF chunk walk and
+    compositing here, per-frame decode through :func:`decode_webp`
+    (libwebp; VP8L lossless and VP8 lossy key frames) — mixed-codec
+    animations are legal and covered.  Composition: frames paste at
+    their (2x-scaled) offsets; alpha is dropped module-wide, so both
+    blending modes reduce to overwrite, and disposal-to-background
+    restores the canvas (ANIM background, alpha-dropped → black).  A
+    still WebP decodes as one zero-duration frame.  ``max_frames``
+    bounds decode work per payload (the long-animation guard, as in
     :func:`decode_gif_frames`)."""
     import struct
 
@@ -2477,34 +2479,12 @@ def webp_animation_features(
     )
 
 
-# --- real image codec for WebP lossless (VP8L) -------------------------------------
-# Implemented from the public WebP Lossless Bitstream Specification
-# (RFC 9649 §3; also google/libwebp's documented decoder behavior):
-# LSB-first bit stream, canonical (deflate-style) prefix codes with the
-# meta-code-length alphabet, color cache, LZ77 over the ARGB pixel
-# array with the 120-entry 2D distance map, and the four transforms
-# (predictor / cross-color / subtract-green / color-indexing with
-# pixel bundling).  Lossy WebP (VP8) decodes via operators/vp8.py (r13).
-
-#: RFC 9649 distance-map: codes 1..120 → (xoffset, yoffset) packed as
-#: (y << 4) | (8 - x).  Self-consistency (domain = {y=0, x 1..8} ∪
-#: {y 1..7, x -7..8}, each exactly once) is pinned in tests.
-_WEBP_CODE_TO_PLANE = bytes(
-    (
-        0x18, 0x07, 0x17, 0x19, 0x28, 0x06, 0x27, 0x29, 0x16, 0x1A,
-        0x26, 0x2A, 0x38, 0x05, 0x37, 0x39, 0x15, 0x1B, 0x36, 0x3A,
-        0x25, 0x2B, 0x48, 0x04, 0x47, 0x49, 0x14, 0x1C, 0x35, 0x3B,
-        0x46, 0x4A, 0x24, 0x2C, 0x58, 0x45, 0x4B, 0x34, 0x3C, 0x03,
-        0x57, 0x59, 0x13, 0x1D, 0x56, 0x5A, 0x23, 0x2D, 0x44, 0x4C,
-        0x55, 0x5B, 0x33, 0x3D, 0x68, 0x02, 0x67, 0x69, 0x12, 0x1E,
-        0x66, 0x6A, 0x22, 0x2E, 0x54, 0x5C, 0x43, 0x4D, 0x65, 0x6B,
-        0x32, 0x3E, 0x78, 0x01, 0x77, 0x79, 0x53, 0x5D, 0x11, 0x1F,
-        0x64, 0x6C, 0x42, 0x4E, 0x76, 0x7A, 0x21, 0x2F, 0x75, 0x7B,
-        0x31, 0x3F, 0x63, 0x6D, 0x52, 0x5E, 0x00, 0x74, 0x7C, 0x41,
-        0x4F, 0x10, 0x20, 0x62, 0x6E, 0x30, 0x73, 0x7D, 0x51, 0x5F,
-        0x40, 0x72, 0x7E, 0x61, 0x6F, 0x50, 0x71, 0x7F, 0x60, 0x70,
-    )
-)
+# --- WebP still images: libwebp decode, in-repo VP8L fixture writer -----------------
+# Decoding goes through the system libwebp (operators/webp.py); this
+# module does the RIFF chunk walk, the key-frame refusal and the
+# BT.601 conversion of lossy frames.  The VP8L writer below follows the
+# WebP Lossless Bitstream Specification (RFC 9649 §3) and the VP8
+# fixture encoder lives in operators/vp8_enc.py.
 
 #: code-length symbols arrive in this fixed order (RFC 9649 §3.7.2.2)
 _WEBP_CLC_ORDER = (
@@ -2512,433 +2492,40 @@ _WEBP_CLC_ORDER = (
 )
 
 
-class _Vp8lBitReader:
-    """LSB-first bit reader (VP8L convention: bit 0 of byte 0 first)."""
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.bitpos = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        d, p = self.d, self.bitpos
-        for i in range(n):
-            if (p >> 3) >= len(d):
-                raise ValueError("vp8l: bitstream truncated")
-            v |= ((d[p >> 3] >> (p & 7)) & 1) << i
-            p += 1
-        self.bitpos = p
-        return v
-
-
-def _vp8l_canonical(lengths):
-    """Deflate-canonical decode table from per-symbol code lengths:
-    codes assigned in (length, symbol) order.  Single used symbol →
-    a 0-bit constant code (the VP8L degenerate form)."""
-    nz = [(l, s) for s, l in enumerate(lengths) if l > 0]
-    if not nz:
-        raise ValueError("vp8l: empty prefix code")
-    if len(nz) == 1:
-        return ("const", nz[0][1])
-    nz.sort()
-    table = {}
-    code = 0
-    prev_len = nz[0][0]
-    for l, s in nz:
-        code <<= l - prev_len
-        prev_len = l
-        table[(l, code)] = s
-        code += 1
-    maxlen = nz[-1][0]
-    if code != (1 << maxlen):
-        raise ValueError("vp8l: prefix code is not complete")
-    return ("tab", table, maxlen)
-
-
-def _vp8l_read_symbol(br, code):
-    if code[0] == "const":
-        return code[1]
-    _, table, maxlen = code
-    acc = 0
-    l = 0
-    while l < maxlen:
-        acc = (acc << 1) | br.read(1)
-        l += 1
-        s = table.get((l, acc))
-        if s is not None:
-            return s
-    raise ValueError("vp8l: invalid prefix code word")
-
-
-def _vp8l_read_code(br, alphabet_size):
-    """One prefix code: the 1-bit simple form (1-2 literal symbols) or
-    the full code-length-coded form (RFC 9649 §3.7.2)."""
-    if br.read(1):  # simple
-        num_symbols = br.read(1) + 1
-        first_8bits = br.read(1)
-        s0 = br.read(8 if first_8bits else 1)
-        if num_symbols == 1:
-            return ("const", s0)
-        s1 = br.read(8)
-        # codes follow READ order here, not canonical symbol order
-        return ("tab", {(1, 0): s0, (1, 1): s1}, 1)
-    num_clc = 4 + br.read(4)
-    clc_lengths = [0] * 19
-    for i in range(num_clc):
-        clc_lengths[_WEBP_CLC_ORDER[i]] = br.read(3)
-    clc = _vp8l_canonical(clc_lengths)
-    if br.read(1):  # explicit max-symbol count
-        length_nbits = 2 + 2 * br.read(3)
-        max_symbol = 2 + br.read(length_nbits)
-    else:
-        max_symbol = alphabet_size
-    lengths = [0] * alphabet_size
-    prev_len = 8
-    symbol = 0
-    while symbol < alphabet_size:
-        if max_symbol == 0:
-            break
-        max_symbol -= 1
-        s = _vp8l_read_symbol(br, clc)
-        if s < 16:
-            lengths[symbol] = s
-            symbol += 1
-            if s != 0:
-                prev_len = s
-        else:
-            if s == 16:
-                repeat, fill = 3 + br.read(2), prev_len
-            elif s == 17:
-                repeat, fill = 3 + br.read(3), 0
-            else:
-                repeat, fill = 11 + br.read(7), 0
-            if symbol + repeat > alphabet_size:
-                raise ValueError("vp8l: code-length repeat overflow")
-            for _ in range(repeat):
-                lengths[symbol] = fill
-                symbol += 1
-    return _vp8l_canonical(lengths)
-
-
-def _vp8l_prefix_value(code, br):
-    """LZ77 length/distance prefix decoding (RFC 9649 §3.6.2.2)."""
-    if code < 4:
-        return code + 1
-    extra_bits = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra_bits
-    return offset + br.read(extra_bits) + 1
-
-
-def _vp8l_plane_to_dist(plane_code, xsize):
-    if plane_code > 120:
-        return plane_code - 120
-    packed = _WEBP_CODE_TO_PLANE[plane_code - 1]
-    yoffset = packed >> 4
-    xoffset = 8 - (packed & 0xF)
-    return max(1, yoffset * xsize + xoffset)
-
-
-def _vp8l_decode_stream(br, xsize, ysize, is_level0):
-    """One VP8L image stream → (list[int] ARGB, row-major).  Level-0
-    streams may carry transforms (applied inversely, in reverse read
-    order) and a meta prefix-code image; every stream may carry a
-    color cache.  Recurses for subresolution images."""
-    transforms = []
-    if is_level0:
-        seen = set()
-        while br.read(1):
-            ttype = br.read(2)
-            if ttype in seen:
-                raise ValueError("vp8l: duplicate transform")
-            seen.add(ttype)
-            if ttype == 2:  # subtract green
-                transforms.append(("subgreen",))
-            elif ttype == 3:  # color indexing (+ pixel bundling)
-                n_colors = br.read(8) + 1
-                pal = _vp8l_decode_stream(br, n_colors, 1, False)
-                for i in range(1, n_colors):  # delta-coded entries
-                    pal[i] = _vp8l_add_pixels(pal[i], pal[i - 1])
-                bits = (
-                    3 if n_colors <= 2 else
-                    2 if n_colors <= 4 else
-                    1 if n_colors <= 16 else 0
-                )
-                transforms.append(("index", pal, bits, xsize))
-                if bits:
-                    xsize = (xsize + (1 << bits) - 1) >> bits
-            else:  # 0 predictor / 1 cross-color
-                size_bits = br.read(3) + 2
-                bw = (xsize + (1 << size_bits) - 1) >> size_bits
-                bh = (ysize + (1 << size_bits) - 1) >> size_bits
-                sub = _vp8l_decode_stream(br, bw, bh, False)
-                transforms.append(
-                    ("pred" if ttype == 0 else "color", size_bits, sub, bw)
-                )
-    cache_bits = br.read(4) if br.read(1) else 0
-    cache_size = (1 << cache_bits) if cache_bits else 0
-    cache = [0] * cache_size
-    meta = None
-    if is_level0 and br.read(1):
-        huff_bits = br.read(3) + 2
-        hw = (xsize + (1 << huff_bits) - 1) >> huff_bits
-        hh = (ysize + (1 << huff_bits) - 1) >> huff_bits
-        meta_img = _vp8l_decode_stream(br, hw, hh, False)
-        meta = (huff_bits, hw, [(p >> 8) & 0xFFFF for p in meta_img])
-        n_groups = max(meta[2]) + 1
-    else:
-        n_groups = 1
-    alphabets = (256 + 24 + cache_size, 256, 256, 256, 40)
-    groups = [
-        [_vp8l_read_code(br, a) for a in alphabets] for _ in range(n_groups)
-    ]
-    n = xsize * ysize
-    argb = [0] * n
-    pos = 0
-    grp = groups[0]
-    while pos < n:
-        if meta is not None:
-            hb, hw, midx = meta
-            grp = groups[midx[((pos // xsize) >> hb) * hw
-                             + ((pos % xsize) >> hb)]]
-        s = _vp8l_read_symbol(br, grp[0])
-        if s < 256:
-            r = _vp8l_read_symbol(br, grp[1])
-            b = _vp8l_read_symbol(br, grp[2])
-            a = _vp8l_read_symbol(br, grp[3])
-            px = (a << 24) | (r << 16) | (s << 8) | b
-            argb[pos] = px
-            pos += 1
-            if cache_size:
-                cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)] = px
-        elif s < 280:
-            length = _vp8l_prefix_value(s - 256, br)
-            dcode = _vp8l_read_symbol(br, grp[4])
-            dist = _vp8l_plane_to_dist(_vp8l_prefix_value(dcode, br), xsize)
-            if dist > pos or pos + length > n:
-                raise ValueError("vp8l: LZ77 copy out of range")
-            for _ in range(length):
-                px = argb[pos - dist]
-                argb[pos] = px
-                pos += 1
-                if cache_size:
-                    cache[
-                        ((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)
-                    ] = px
-        else:
-            argb[pos] = cache[s - 280]
-            pos += 1
-    for tf in reversed(transforms):
-        argb, xsize = _vp8l_inverse_transform(tf, argb, xsize, ysize)
-    return argb
-
-
-def _vp8l_avg2(a, b):
-    return (
-        ((((a >> 24) + (b >> 24)) >> 1) << 24)
-        | (((((a >> 16) & 0xFF) + ((b >> 16) & 0xFF)) >> 1) << 16)
-        | (((((a >> 8) & 0xFF) + ((b >> 8) & 0xFF)) >> 1) << 8)
-        | ((((a & 0xFF) + (b & 0xFF)) >> 1))
-    )
-
-
-def _vp8l_select(t, l, tl):
-    # libwebp Select(): Σ(|L_c−TL_c| − |T_c−TL_c|) ≤ 0 → T else L
-    s = 0
-    for sh in (24, 16, 8, 0):
-        lc, tc, tlc = (l >> sh) & 0xFF, (t >> sh) & 0xFF, (tl >> sh) & 0xFF
-        s += abs(lc - tlc) - abs(tc - tlc)
-    return t if s <= 0 else l
-
-
-def _vp8l_clamp_add_full(l, t, tl):
-    out = 0
-    for sh in (24, 16, 8, 0):
-        v = ((l >> sh) & 0xFF) + ((t >> sh) & 0xFF) - ((tl >> sh) & 0xFF)
-        out |= min(255, max(0, v)) << sh
-    return out
-
-
-def _vp8l_clamp_add_half(l, t, tl):
-    ave = _vp8l_avg2(l, t)
-    out = 0
-    for sh in (24, 16, 8, 0):
-        a = (ave >> sh) & 0xFF
-        b = (tl >> sh) & 0xFF
-        d = a - b
-        half = d // 2 if d >= 0 else -((-d) // 2)  # C trunc-toward-0
-        out |= min(255, max(0, a + half)) << sh
-    return out
-
-
-def _vp8l_add_pixels(a, b):
-    return (
-        ((((a >> 24) + (b >> 24)) & 0xFF) << 24)
-        | (((((a >> 16) & 0xFF) + ((b >> 16) & 0xFF)) & 0xFF) << 16)
-        | (((((a >> 8) & 0xFF) + ((b >> 8) & 0xFF)) & 0xFF) << 8)
-        | ((((a & 0xFF) + (b & 0xFF)) & 0xFF))
-    )
-
-
-def _vp8l_inverse_transform(tf, argb, xsize, ysize):
-    kind = tf[0]
-    if kind == "subgreen":
-        for i, px in enumerate(argb):
-            g = (px >> 8) & 0xFF
-            r = (((px >> 16) & 0xFF) + g) & 0xFF
-            b = ((px & 0xFF) + g) & 0xFF
-            argb[i] = (px & 0xFF00FF00) | (r << 16) | b
-        return argb, xsize
-    if kind == "pred":
-        _, size_bits, sub, bw = tf
-        out = argb
-        for y in range(ysize):
-            for x in range(xsize):
-                i = y * xsize + x
-                if x == 0 and y == 0:
-                    pred = 0xFF000000
-                elif y == 0:
-                    pred = out[i - 1]
-                elif x == 0:
-                    pred = out[i - xsize]
-                else:
-                    mode = (sub[(y >> size_bits) * bw + (x >> size_bits)]
-                            >> 8) & 0xFF
-                    L = out[i - 1]
-                    T = out[i - xsize]
-                    TL = out[i - xsize - 1]
-                    # RFC 9649 §4.2 / libwebp: TR is read from the
-                    # contiguous ARGB buffer, so on the rightmost column
-                    # (x == xsize-1) out[i-xsize+1] wraps to the already
-                    # -decoded LEFTMOST pixel of the CURRENT row — not
-                    # the top pixel.  Mirrors PredictorXX's
-                    # top[1] == row start wrap in libwebp lossless.c.
-                    TR = out[i - xsize + 1]
-                    if mode == 0:
-                        pred = 0xFF000000
-                    elif mode == 1:
-                        pred = L
-                    elif mode == 2:
-                        pred = T
-                    elif mode == 3:
-                        pred = TR
-                    elif mode == 4:
-                        pred = TL
-                    elif mode == 5:
-                        pred = _vp8l_avg2(_vp8l_avg2(L, TR), T)
-                    elif mode == 6:
-                        pred = _vp8l_avg2(L, TL)
-                    elif mode == 7:
-                        pred = _vp8l_avg2(L, T)
-                    elif mode == 8:
-                        pred = _vp8l_avg2(TL, T)
-                    elif mode == 9:
-                        pred = _vp8l_avg2(T, TR)
-                    elif mode == 10:
-                        pred = _vp8l_avg2(
-                            _vp8l_avg2(L, TL), _vp8l_avg2(T, TR)
-                        )
-                    elif mode == 11:
-                        pred = _vp8l_select(T, L, TL)
-                    elif mode == 12:
-                        pred = _vp8l_clamp_add_full(L, T, TL)
-                    elif mode == 13:
-                        pred = _vp8l_clamp_add_half(L, T, TL)
-                    else:
-                        raise ValueError(f"vp8l: predictor mode {mode}")
-                out[i] = _vp8l_add_pixels(out[i], pred)
-        return out, xsize
-    if kind == "color":
-        _, size_bits, sub, bw = tf
-
-        def s8(v):  # int8 reinterpretation (libwebp ColorTransformDelta)
-            return v - 256 if v >= 128 else v
-
-        for y in range(ysize):
-            for x in range(xsize):
-                i = y * xsize + x
-                cte = sub[(y >> size_bits) * bw + (x >> size_bits)]
-                g2r = s8(cte & 0xFF)
-                g2b = s8((cte >> 8) & 0xFF)
-                r2b = s8((cte >> 16) & 0xFF)
-                px = argb[i]
-                g = s8((px >> 8) & 0xFF)
-                r = (((px >> 16) & 0xFF) + ((g2r * g) >> 5)) & 0xFF
-                b = ((px & 0xFF) + ((g2b * g) >> 5) + ((r2b * s8(r)) >> 5)) & 0xFF
-                argb[i] = (px & 0xFF00FF00) | (r << 16) | b
-        return argb, xsize
-    if kind == "index":
-        _, pal, bits, full_xsize = tf
-        if bits == 0:
-            out = [
-                pal[(px >> 8) & 0xFF] if ((px >> 8) & 0xFF) < len(pal) else 0
-                for px in argb
-            ]
-            return out, xsize
-        bpp = 8 >> bits
-        mask = (1 << bpp) - 1
-        per = 1 << bits
-        out = [0] * (full_xsize * ysize)
-        for y in range(ysize):
-            for x in range(full_xsize):
-                packed = argb[y * xsize + (x >> bits)]
-                idx = ((packed >> 8) & 0xFF) >> ((x % per) * bpp) & mask
-                out[y * full_xsize + x] = pal[idx] if idx < len(pal) else 0
-        return out, full_xsize
-    raise ValueError(f"vp8l: unknown transform {kind}")
-
-
 @_codec_quarantine
 def decode_webp(content: bytes):
-    """WebP → (width, height, HxWx3 uint8 RGB) with NO codec library.
+    """WebP → (width, height, HxWx3 uint8 RGB) through the system
+    libwebp.
 
-    Lossless (VP8L): RIFF chunk walk + the full VP8L entropy decode
-    (prefix codes, color cache, LZ77 with the 2D distance map, all
-    four transforms).  Lossy (VP8): the RFC 6386 key-frame decoder in
-    ``operators/vp8.py`` (boolean decoder, intra prediction, IDCT/WHT,
-    in-loop filter — differentially verified bit-exact against libwebp
-    at the YUV level), followed by the BT.601 integer YUV→RGB
-    conversion below (nearest-neighbor chroma upsampling; the RGB
-    conversion is the one conversion choice not pinned by RFC 6386).
-    Alpha is dropped like every decoder in this module."""
+    The RIFF chunk walk finds the first VP8L or VP8 chunk.  Lossless
+    (VP8L) decodes straight to RGB, exactly.  Lossy (VP8) decodes to
+    YUV420 planes in libwebp, then the BT.601 integer conversion below
+    makes RGB (nearest-neighbor chroma upsampling — the q299 oracle
+    pins this conversion).  Inter frames are refused: a still image or
+    an animation frame must be a key frame.  Alpha is dropped like
+    every decoder in this module; undecodable payloads raise
+    ValueError."""
     import struct
 
-    import numpy as np
+    from parquet_on_fhir_spark.operators import webp
 
     if content[:4] != b"RIFF" or content[8:12] != b"WEBP":
         raise ValueError("not a WebP (RIFF/WEBP) container")
-    pos, payload = 12, None
+    pos = 12
     while pos + 8 <= len(content):
         fourcc = content[pos : pos + 4]
         (size,) = struct.unpack_from("<I", content, pos + 4)
-        body = content[pos + 8 : pos + 8 + size]
+        chunk = content[pos : pos + 8 + size]
         if fourcc == b"VP8L":
-            payload = body
-            break
+            return webp.decode_rgb(chunk)
         if fourcc == b"VP8 ":
-            from parquet_on_fhir_spark.operators.vp8 import decode_vp8
-
-            w, h, Y, U, V = decode_vp8(body)
+            # frame tag bit 0 clear marks a key frame (RFC 6386 §9.1)
+            if len(chunk) > 8 and chunk[8] & 1:
+                raise ValueError("vp8: only key frames (still images) supported")
+            w, h, Y, U, V = webp.decode_yuv(chunk)
             return w, h, _yuv420_to_rgb(Y, U, V)
         pos += 8 + size + (size & 1)  # chunks are 2-byte aligned
-    if payload is None or not payload or payload[0] != 0x2F:
-        raise ValueError("WebP: no VP8L chunk / bad signature")
-    br = _Vp8lBitReader(payload[1:])
-    w = br.read(14) + 1
-    h = br.read(14) + 1
-    br.read(1)  # alpha-used hint
-    if br.read(3) != 0:
-        raise ValueError("vp8l: unknown version")
-    argb = _vp8l_decode_stream(br, w, h, True)
-    arr = np.array(argb, dtype=np.uint32).reshape(h, w)
-    img = np.stack(
-        [
-            (arr >> 16) & 0xFF,
-            (arr >> 8) & 0xFF,
-            arr & 0xFF,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    return w, h, np.ascontiguousarray(img)
+    raise ValueError("WebP: no VP8/VP8L chunk")
 
 
 def _yuv420_to_rgb(Y, U, V):
@@ -3019,7 +2606,7 @@ def _vp8l_build_lengths(freqs: dict, max_len: int = 15) -> dict:
 
 def _vp8l_canonical_codes(lengths: dict) -> dict:
     """{symbol: (nbits, code)} in deflate-canonical (length, symbol)
-    order — the assignment _vp8l_canonical() inverts."""
+    order, as RFC 9649 decoders rebuild it from the lengths."""
     out = {}
     code = 0
     prev = None
@@ -3077,8 +2664,8 @@ def _vp8l_write_code(bw, lengths: dict, alphabet_size: int) -> dict:
 
 
 def _vp8l_prefix_encode(value: int):
-    """Inverse of _vp8l_prefix_value: (prefix_code, extra_bits,
-    extra_value)."""
+    """LZ77 length/distance → (prefix_code, extra_bits, extra_value),
+    the prefix coding of RFC 9649 §3.6.2.2."""
     if value <= 4:
         return value - 1, 0, 0
     for code in range(4, 24):
@@ -3091,14 +2678,14 @@ def _vp8l_prefix_encode(value: int):
 
 def encode_webp_lossless(pixels, use_lz77: bool = False) -> bytes:
     """HxWx3 uint8 → lossless WebP (RIFF + VP8L) with NO codec library
-    — the fixture writer proving decode_webp handles real VP8L entropy
+    — the fixture writer for decode_webp, emitting real VP8L entropy
     streams.  Canonical per-channel prefix codes over the actual symbol
     frequencies (the full code-length-coded serialization, not just the
     2-symbol simple form); with ``use_lz77`` runs of the previous pixel
     are LZ77-coded through the 2D distance map's (1,0) offset, plus a
     1-bit color cache, exercising the copy/cache decode paths.  No
-    transforms (the decoder's transform paths are covered by
-    synthetic-stream tests)."""
+    transforms (hand-assembled streams in tests/test_webp_codec.py
+    cover those)."""
     import numpy as np
 
     arr = np.asarray(pixels, dtype=np.uint8)

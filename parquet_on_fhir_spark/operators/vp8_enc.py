@@ -6,16 +6,14 @@
    residual in the first macroblock whose dequantized inverse
    reconstructs the target value bit-perfectly — the q284 exactness
    lever, lossy edition).
-2. **Fuzz driver** for the decoder: writes arbitrary (mode,
-   coefficient) assignments as valid streams, so the differential
-   tests can compare this package's decoder against the system libwebp
-   on streams that exercise every token/category/context path.
+2. **Fuzz generator**: writes arbitrary (mode, coefficient) assignments
+   as valid streams that exercise every token/category/context path
+   of the decoder (the system libwebp, operators/webp.py).
 
 Only what a key frame needs is implemented: no segmentation update,
-no prob updates, single token partition, configurable loop-filter
+no prob updates, configurable token partitions and loop-filter
 header fields. The system libwebp decoding our output to the expected
-pixels is the proof the bitstream writer is spec-true (and therefore
-that the decoder's matching output is not a paired bug).
+pixels is the proof the bitstream writer is spec-true.
 """
 
 from __future__ import annotations

@@ -4079,13 +4079,13 @@ def q284(spark, sf_dir):
     gray g, rows 4-7 its inverse) carrying REAL VP8L entropy streams
     (canonical prefix codes with the full code-length-coded
     serialization; every even g additionally LZ77-codes its runs
-    through the 2D distance map and a 1-bit color cache) — broadcast
-    onto documents and decoded by the pure-python VP8L codec inside
-    mapInPandas. Lossless means decode is EXACT, so the closed-form
-    oracle pins lum_00 = g/255 and lum_77 = (255-g)/255 with no
-    tolerance beyond d4. Same plan shape as q255/q270: the fact side
-    never shuffles. Lossy VP8 payloads route to the decode_real PIL
-    seam (module docstring)."""
+    through the 2D distance map and a 1-bit color cache), written by
+    the in-repo encoder — broadcast onto documents and decoded by the
+    system libwebp (operators/webp.py) inside mapInPandas. Lossless
+    means decode is EXACT, so the closed-form oracle pins
+    lum_00 = g/255 and lum_77 = (255-g)/255 with no tolerance beyond
+    d4. Same plan shape as q255/q270: the fact side never shuffles.
+    Lossy VP8 payloads are q299."""
     import numpy as np
 
     from parquet_on_fhir_spark.operators.multimodal import (
@@ -4146,22 +4146,21 @@ QUERIES.append(Q("q284_webp_lossless_real_decode", q284, Q284_ORACLE))
 
 # --- Q299: lossy WebP (VP8 key-frame) real decode --------------------------------------
 def q299(spark, sf_dir):
-    """operators/vp8.py::decode_vp8 end-to-end (r13): 150 genuine
+    """Lossy WebP decode end-to-end (r13): 150 genuine
     LOSSY WebP files — solid-gray VP8 key frames from the in-repo RFC
     6386 fixture encoder (operators/vp8_enc.py::encode_webp_solid,
     boolean-arithmetic-coded, DC-only Y2 residual in MB(0,0), DC
     prediction propagating it across the 2x1 cropped MB grid) —
-    broadcast onto documents and decoded by the pure-python VP8
-    decoder inside mapInPandas (decode_pixels dispatch + the BT.601
-    integer YUV->RGB in multimodal.py). Solid color makes the LOSSY
+    broadcast onto documents and decoded by the system libwebp
+    (operators/webp.py) inside mapInPandas (decode_pixels dispatch +
+    the BT.601 integer YUV->RGB in multimodal.py). Solid color makes the LOSSY
     path EXACT (the q284 lever, lossy edition): the oracle pins the
     full integer round trip in closed form — gray g -> Y plane value
     y = (56318*g + 1081344) // 65536 (libwebp's RGB->Y, fixture
     ground truth) -> decoded gray ((y-16)*19077 + 8192) // 16384.
-    Decoder correctness vs the system libwebp (segmentation, prob
-    updates, in-loop filter, real encoder streams) is pinned
-    bit-exactly in tests/test_vp8_codec.py. Same broadcast plan shape
-    as q284: the fact side never shuffles."""
+    tests/test_vp8_codec.py pins that libwebp accepts the encoder's
+    streams (random modes/coefficients, multi-partition frames). Same
+    broadcast plan shape as q284: the fact side never shuffles."""
     from parquet_on_fhir_spark.operators.multimodal import (
         extract_features,
         numpy_features,

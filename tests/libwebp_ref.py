@@ -1,20 +1,27 @@
-"""ctypes bindings to the system libwebp (BSD-3) used ONLY as a test
-oracle: differential validation of the pure-Python VP8/VP8L codecs in
-``operators/vp8.py`` / ``operators/vp8_enc.py``. Import-guarded — tests
-skip when the shared object is absent."""
+"""libwebp's encoders (BSD-3) as test-only fixture writers, bound on
+the package's libwebp handle (``operators/webp.py``), which also
+decodes.  Import-guarded — tests skip when the shared object is
+absent."""
 
 from __future__ import annotations
 
 import ctypes
 
 import numpy as np
+import pytest
+
+from parquet_on_fhir_spark.operators.webp import _load
 
 try:
-    _lw = ctypes.CDLL("libwebp.so.7")
+    _lw = _load()
     HAVE_LIBWEBP = True
-except OSError:  # pragma: no cover
+except NotImplementedError:  # pragma: no cover
     _lw = None
     HAVE_LIBWEBP = False
+
+needs_libwebp = pytest.mark.skipif(
+    not HAVE_LIBWEBP, reason="system libwebp not present"
+)
 
 if HAVE_LIBWEBP:
     _lw.WebPEncodeRGB.restype = ctypes.c_size_t
@@ -27,19 +34,6 @@ if HAVE_LIBWEBP:
         ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
         ctypes.POINTER(ctypes.c_void_p),
     ]
-    _lw.WebPDecodeYUV.restype = ctypes.c_void_p
-    _lw.WebPDecodeYUV.argtypes = [
-        ctypes.c_char_p, ctypes.c_size_t,
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-        ctypes.POINTER(ctypes.c_void_p), ctypes.POINTER(ctypes.c_void_p),
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-    ]
-    _lw.WebPDecodeRGB.restype = ctypes.c_void_p
-    _lw.WebPDecodeRGB.argtypes = [
-        ctypes.c_char_p, ctypes.c_size_t,
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-    ]
-    _lw.WebPFree.argtypes = [ctypes.c_void_p]
 
 
 def encode_rgb_lossy(img: np.ndarray, quality: float = 75.0) -> bytes:
@@ -66,49 +60,3 @@ def encode_rgb_lossless(img: np.ndarray) -> bytes:
     blob = ctypes.string_at(out, n)
     _lw.WebPFree(out)
     return blob
-
-
-def decode_yuv(blob: bytes):
-    """libwebp decode to raw Y/U/V planes (the pre-upsampling ground
-    truth the pure-Python decoder must match bit-exactly). Returns
-    (w, h, Y, U, V) or None if libwebp rejects the stream."""
-    w = ctypes.c_int()
-    h = ctypes.c_int()
-    u = ctypes.c_void_p()
-    v = ctypes.c_void_p()
-    st = ctypes.c_int()
-    uvst = ctypes.c_int()
-    yp = _lw.WebPDecodeYUV(
-        blob, len(blob), ctypes.byref(w), ctypes.byref(h),
-        ctypes.byref(u), ctypes.byref(v), ctypes.byref(st),
-        ctypes.byref(uvst),
-    )
-    if not yp:
-        return None
-    W, H = w.value, h.value
-    cw, ch = (W + 1) // 2, (H + 1) // 2
-    Y = np.frombuffer(
-        ctypes.string_at(yp, st.value * H), np.uint8
-    ).reshape(H, st.value)[:, :W].copy()
-    U = np.frombuffer(
-        ctypes.string_at(u.value, uvst.value * ch), np.uint8
-    ).reshape(ch, uvst.value)[:, :cw].copy()
-    V = np.frombuffer(
-        ctypes.string_at(v.value, uvst.value * ch), np.uint8
-    ).reshape(ch, uvst.value)[:, :cw].copy()
-    _lw.WebPFree(ctypes.c_void_p(yp))
-    return W, H, Y, U, V
-
-
-def decode_rgb(blob: bytes):
-    w = ctypes.c_int()
-    h = ctypes.c_int()
-    p = _lw.WebPDecodeRGB(blob, len(blob), ctypes.byref(w), ctypes.byref(h))
-    if not p:
-        return None
-    W, H = w.value, h.value
-    img = np.frombuffer(
-        ctypes.string_at(p, W * H * 3), np.uint8
-    ).reshape(H, W, 3).copy()
-    _lw.WebPFree(ctypes.c_void_p(p))
-    return img

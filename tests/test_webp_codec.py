@@ -1,9 +1,9 @@
-"""VP8L (lossless WebP) codec tests: encoder↔decoder round-trips over
-the entropy paths the fixture writer emits (canonical prefix codes,
-LZ77 runs through the distance map, color cache), plus HAND-ASSEMBLED
-streams for each of the four transforms — the decoder paths the
-encoder deliberately does not produce — and the distance-map
-self-consistency pin."""
+"""VP8L (lossless WebP) codec tests: the in-repo fixture writer's
+streams round-trip through decode_webp (libwebp) over the entropy
+paths the writer emits (canonical prefix codes, LZ77 runs through the
+distance map, color cache), plus HAND-ASSEMBLED streams for each of
+the four transforms — the paths the writer deliberately does not
+produce — and libwebp's own lossless encoder output."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import numpy as np
 import pytest
 
 from parquet_on_fhir_spark.operators.multimodal import (
-    _WEBP_CODE_TO_PLANE,
     _Vp8lBitWriter,
     _vp8l_build_lengths,
     _vp8l_write_code,
@@ -20,22 +19,7 @@ from parquet_on_fhir_spark.operators.multimodal import (
     encode_webp_lossless,
 )
 
-
-def test_distance_map_domain_exact():
-    """RFC 9649 dist map: 120 distinct offsets = {y=0, x 1..8} ∪
-    {y 1..7, x -7..8}; first entries match the spec's listed order
-    (0,1),(1,0),(1,1),(-1,1),(0,2),(2,0),(1,2),(-1,2),(2,1),(-2,1)."""
-    pairs = [((b >> 4), 8 - (b & 0xF)) for b in _WEBP_CODE_TO_PLANE]
-    assert len(pairs) == 120
-    assert len(set(pairs)) == 120
-    want = {(0, x) for x in range(1, 9)} | {
-        (y, x) for y in range(1, 8) for x in range(-7, 9)
-    }
-    assert set(pairs) == want
-    assert [(x, y) for y, x in pairs[:10]] == [
-        (0, 1), (1, 0), (1, 1), (-1, 1), (0, 2),
-        (2, 0), (1, 2), (-1, 2), (2, 1), (-2, 1),
-    ]
+from libwebp_ref import encode_rgb_lossless, needs_libwebp
 
 
 def test_roundtrip_random_and_runs():
@@ -74,8 +58,8 @@ def test_decode_pixels_dispatch_and_lossy_routing():
     blob = encode_webp_lossless(img)
     w, h, out = decode_pixels(blob, "image/webp")
     assert (w, h) == (4, 4) and np.array_equal(out, img)
-    # lossy VP8 chunks now route to the RFC 6386 decoder
-    # (tests/test_vp8_codec.py); garbage payloads still raise
+    # lossy VP8 chunks route to libwebp (tests/test_vp8_codec.py);
+    # garbage payloads raise
     lossy_garbage = (
         b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
         + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4
@@ -334,3 +318,16 @@ def test_color_cache_synthetic_stream():
     blob = encode_webp_lossless(img, use_lz77=True)
     _, _, out = decode_webp(blob)
     assert np.array_equal(out, img)
+
+
+@needs_libwebp
+def test_libwebp_lossless_streams_exact():
+    """libwebp's own lossless encoder (transforms, meta prefix codes,
+    color cache chosen by its heuristics) → decode_webp is exact."""
+    rng = np.random.default_rng(9)
+    for shape in [(1, 1), (7, 13), (32, 17)]:
+        img = rng.integers(0, 256, size=(*shape, 3), dtype=np.uint8)
+        img[: shape[0] // 2] //= 16  # low-entropy half: palette/cache paths
+        w, h, out = decode_webp(encode_rgb_lossless(img))
+        assert (w, h) == (shape[1], shape[0])
+        assert np.array_equal(out, img), shape

@@ -12,11 +12,11 @@ constants, not creative expression) via content anchors that are
 structural properties of the tables, and emits them as Python data.
 
 Verification is end-to-end, not provenance-based: a single wrong byte
-in any probability table desynchronizes the boolean decoder, so the
-differential decode tests in tests/test_vp8_codec.py (our decoder vs
-WebPDecodeYUV over libwebp-encoded fixtures) prove the extracted
-values.  Run this tool with ``--check`` to confirm the committed
-module still matches the system library.
+in any probability table desynchronizes the boolean coder, so libwebp
+decoding the fixture encoder's streams (tests/test_vp8_codec.py: exact
+solid-color planes, random mode/coefficient frames) proves the
+extracted values the encoder uses.  Run this tool with ``--check`` to
+confirm the committed module still matches the system library.
 """
 
 from __future__ import annotations

@@ -10,7 +10,9 @@ Usage:
 
 Prints one JSON line per query:
     {"name": ..., "wall_med": s, "jobs_per_run": n,
-     "job_wall_sum": s, "top_stages": [[stage, wall_s, taskTime_s], ...]}
+     "top_stages": [[stage, wall_s, executorRunTime_s, numTasks], ...]}
+(at most 12 stages, slowest wall first; wall_s is -1.0 when the REST
+API gives no submission/completion time).
 """
 
 from __future__ import annotations
