@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_on_fhir_spark.operators.graph import fixpoint
+
 
 @contextmanager
 def _metadata_execution(spark):
@@ -250,75 +252,62 @@ def concept_edges(codesystems: DataFrame) -> DataFrame:
 
 def concept_closure(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Transitive closure (system, ancestor, descendant) of is-a edges
-    by PATH DOUBLING: each round joins the closure with itself, so
-    depth-d hierarchies converge in ceil(log2 d) rounds — 5 rounds
-    cover depth 32 (SNOMED-class hierarchies are ~15 deep). Each round
-    is one self-join + distinct on (system, code) keys; lineage is cut
-    per round (localCheckpoint) and convergence is witnessed by the
-    non-decreasing row count reaching a fixpoint. Non-reflexive
-    (a code is not its own descendant here; ``is-a`` filters add the
-    anchor code back explicitly). Raises on non-convergence rather
-    than silently under-closing — same contract as
-    operators/graph.py::connected_components.
+    by path doubling (:func:`_path_double`): a depth-d hierarchy closes
+    in ceil(log2 d) + 1 rounds (SNOMED-class hierarchies are ~15 deep).
+    Non-reflexive (a code is not its own descendant here; ``is-a``
+    filters add the anchor code back explicitly). Raises on
+    non-convergence rather than silently under-closing.
     """
-
-    def sized(df: DataFrame, rows: int) -> DataFrame:
-        # ALWAYS checkpoint: every ECL/filter consumer embeds the
-        # closure, so a lazy doubling plan would be re-analyzed inside
-        # every consumer job (measured 2-3× qf23/qf41 wall when tried).
-        # Checkpointed partitioning is FROZEN (AQE cannot re-coalesce a
-        # checkpoint scan) and every downstream consumer pays one map
-        # task per frozen partition — so shrink to ~1M rows per
-        # partition BEFORE the checkpoint (fixture systems: 1 task,
-        # SNOMED-scale ~10M-row closures: a handful) instead of
-        # carrying spark.sql.shuffle.partitions micro-tasks forever.
-        # LAZY checkpoint (r15): every sized() call is immediately
-        # followed by the round's count() action, so materialization
-        # piggybacks on that job — the eager form paid a separate
-        # materialization job per doubling round (2 jobs/round → 1).
-        return df.coalesce(max(1, rows // 1_000_000)).localCheckpoint(
-            eager=False
-        )
-
-    with _metadata_execution(edges.sparkSession):
-        clo = sized(
-            edges.select(
-                "system",
-                F.col("parent").alias("ancestor"),
-                F.col("child").alias("descendant"),
-            ).distinct(),
-            1,
-        )
-        n = clo.count()
-        for _ in range(max_rounds):
-            hop = clo.select(
-                F.col("system").alias("h_system"),
-                F.col("ancestor").alias("h_anc"),
-                F.col("descendant").alias("h_desc"),
-            )
-            grown = (
-                clo.join(
-                    hop,
-                    (F.col("system") == F.col("h_system"))
-                    & (F.col("descendant") == F.col("h_anc")),
-                )
-                .select(
-                    "system", "ancestor", F.col("h_desc").alias("descendant")
-                )
-                .unionByName(clo)
-                .distinct()
-            )
-            # size estimate: last round's count (path doubling at most
-            # squares reachability; 2n is a fine partition-count proxy)
-            grown = sized(grown, 2 * n)
-            m = grown.count()
-            if m == n:
-                return grown
-            clo, n = grown, m
-    raise RuntimeError(
-        f"concept closure did not converge in {max_rounds} doubling rounds "
-        f"(hierarchy deeper than 2^{max_rounds}? cyclic is-a edges?)"
+    return _path_double(
+        edges.select(
+            "system",
+            F.col("parent").alias("ancestor"),
+            F.col("child").alias("descendant"),
+        ).distinct(),
+        max_rounds,
+        "concept_closure",
     )
+
+
+def _path_double(seed: DataFrame, max_rounds: int, name: str) -> DataFrame:
+    """Close (system, ancestor, descendant) pairs under composition by
+    PATH DOUBLING: each round joins the pairs with themselves and keeps
+    the distinct union, so round r covers paths of up to 2^r seed
+    pairs. One job per round through operators/graph.py::fixpoint (row
+    count as witness), under :func:`_metadata_execution`.
+
+    The result is a checkpoint: every ECL/filter consumer embeds the
+    closure, and a lazy doubling plan would be re-analyzed inside every
+    consumer job (measured 2-3× qf23/qf41 wall). Consumers pay one map
+    task per frozen partition; with one shuffle partition and AQE off,
+    each round's distinct yields exactly one (asserted below).
+    """
+    def double(clo: DataFrame, _rnd: int) -> DataFrame:
+        hop = clo.select(
+            F.col("system").alias("h_system"),
+            F.col("ancestor").alias("h_anc"),
+            F.col("descendant").alias("h_desc"),
+        )
+        return (
+            clo.join(
+                hop,
+                (F.col("system") == F.col("h_system"))
+                & (F.col("descendant") == F.col("h_anc")),
+            )
+            .select("system", "ancestor", F.col("h_desc").alias("descendant"))
+            .unionByName(clo)
+            .distinct()
+        )
+
+    with _metadata_execution(seed.sparkSession):
+        # the first round reads the seed three times (both join sides
+        # and the union): a lazy checkpoint computes it once inside that
+        # round's job — a Python-backed input measured ~3× slower there
+        clo, _ = fixpoint(
+            seed.localCheckpoint(eager=False), double, [], max_rounds, name
+        )
+        assert clo.rdd.getNumPartitions() == 1
+    return clo
 
 
 def closure_delta(
@@ -340,19 +329,18 @@ def closure_delta(
     segments alternating with new edges, so (1) bridge each new edge
     through the old closure on both sides — S₀ = (C∪I)∘E_new∘(C∪I),
     three broadcast-sized joins when the edge batch is small — then
-    (2) path-double S against itself (S-pairs absorb old segments at
-    both ends, so composing S∘S covers paths through 2, 4, 8… new
-    edges), the :func:`concept_closure` fixpoint shape with the SAME
-    convergence contract. Work is bounded by pairs touching new edges,
-    never by |old_closure| — the property that makes nightly SNOMED
-    increments cheap at scale. Output excludes pairs already in
-    ``old_closure`` and self-pairs (the closure is non-reflexive).
+    (2) path-double S against itself with :func:`_path_double`
+    (S-pairs absorb old segments at both ends, so composing S∘S covers
+    paths through 2, 4, 8… new edges), the :func:`concept_closure`
+    fixpoint with the SAME convergence contract; (3) drop self-pairs
+    (the closure is non-reflexive) and pairs already in
+    ``old_closure``. Work is bounded by pairs touching new edges, never
+    by |old_closure| — the property that makes nightly SNOMED
+    increments cheap at scale.
 
     Output: (system, ancestor, descendant) delta rows;
     ``old_closure.unionByName(delta)`` is the new registered closure.
     """
-    from parquet_on_fhir_spark.operators.graph import _truncate_lineage
-
     e = new_edges.select(
         "system",
         F.col("parent").alias("ancestor"),
@@ -392,41 +380,10 @@ def closure_delta(
             "descendant"
         ),
     ).unionByName(seeded).distinct()
-    s = _truncate_lineage(seeded)
-    n = s.count()
-    for _ in range(max_rounds):
-        hop = s.select(
-            F.col("system").alias("h_system"),
-            F.col("ancestor").alias("h_anc"),
-            F.col("descendant").alias("h_desc"),
-        )
-        grown = (
-            s.join(
-                hop,
-                (F.col("system") == F.col("h_system"))
-                & (F.col("descendant") == F.col("h_anc")),
-            )
-            .select(
-                "system", "ancestor", F.col("h_desc").alias("descendant")
-            )
-            .unionByName(s)
-            .distinct()
-        )
-        grown = _truncate_lineage(grown)
-        m = grown.count()
-        if m == n:
-            return (
-                grown.filter(F.col("ancestor") != F.col("descendant"))
-                .join(
-                    old_closure,
-                    ["system", "ancestor", "descendant"],
-                    "left_anti",
-                )
-            )
-        s, n = grown, m
-    raise RuntimeError(
-        f"closure delta did not converge in {max_rounds} doubling "
-        "rounds (new edges deeper than 2^max_rounds? cycle introduced?)"
+    return (
+        _path_double(seeded, max_rounds, "closure_delta")
+        .filter(F.col("ancestor") != F.col("descendant"))
+        .join(old_closure, ["system", "ancestor", "descendant"], "left_anti")
     )
 
 

@@ -540,15 +540,11 @@ def near_dup_clusters(
     k: int = 3,
     hash_family: str = "xxhash64",
     max_iter: int = 25,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Full near-dedup: MinHash → LSH pairs → transitive clusters →
     deterministic survivor per cluster.  ``max_iter`` bounds the
     connected-components rounds (raises rather than under-merging —
-    see operators/graph.py; 25 covers any realistic cluster diameter);
-    ``algorithm="contract"`` switches to large-star/small-star edge
-    contraction (O(log² n) rounds, diameter-independent) for pair
-    graphs with long chains.
+    see operators/graph.py; 25 covers any realistic cluster diameter).
 
     Pairs alone under-delete (a~b and b~c must collapse to ONE survivor
     even when a~c was never emitted), so the pair graph is closed with
@@ -559,10 +555,7 @@ def near_dup_clusters(
     and ``is_survivor`` (true for the cluster minimum — the row exact/
     near dedup would keep).
     """
-    from parquet_on_fhir_spark.operators.graph import (
-        connected_components,
-        connected_components_contract,
-    )
+    from parquet_on_fhir_spark.operators import graph as _graph
 
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes=num_hashes, k=k, hash_family=hash_family
@@ -570,11 +563,7 @@ def near_dup_clusters(
     pairs = minhash_lsh_pairs(
         sigs, id_col, num_bands=num_bands, jaccard_threshold=jaccard_threshold
     )
-    cc_fn = {
-        "label": connected_components,
-        "contract": connected_components_contract,
-    }[algorithm]
-    cc = cc_fn(pairs, "id_a", "id_b", max_iter=max_iter)
+    cc, n_cc = _graph._components(pairs, "id_a", "id_b", max_iter)
     # The label table covers only docs that appear in a near-dup pair.
     # Its checkpointed plan carries no stats, so the left join back to
     # the full corpus would default to a sort-merge join — shuffling
@@ -583,10 +572,7 @@ def near_dup_clusters(
     # (≤1M rows ≈ tens of MB), broadcast it and leave the corpus side
     # completely unshuffled (r16, guide §3.1); bigger label tables
     # keep the shuffle join — a 100 TB pair graph must not broadcast.
-    n_cc = getattr(cc, "_pofs_rows", None)
-    from parquet_on_fhir_spark.operators import graph as _graph
-
-    if isinstance(n_cc, int) and n_cc <= _graph._BROADCAST_MAX_ROWS:
+    if n_cc <= _graph._BROADCAST_MAX_ROWS:
         cc = F.broadcast(cc)
     out = (
         df.select(id_col)

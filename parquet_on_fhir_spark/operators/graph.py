@@ -30,30 +30,58 @@ ACM SoCC 2014), O(log² n) rounds independent of diameter.  Both
 variants RAISE on non-convergence rather than returning a
 partially-propagated labelling.
 
-Lineage is truncated every round (localCheckpoint) so round k's plan
-does not replay rounds 1..k-1; on a real cluster with a checkpoint dir
-configured, ``df.checkpoint()`` would be the durable choice — the seam
-is the one marked call below.
+Every convergence-tested loop — both component variants and
+:func:`k_core` here, the is-a closure in fhir/terminology.py — runs
+through :func:`fixpoint`, which truncates lineage once per round (lazy
+localCheckpoint) so round k's plan does not replay rounds 1..k-1. It is
+the one checkpoint seam: on a real cluster with a checkpoint dir
+configured, ``df.checkpoint()`` there would be the durable choice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import logging
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_log = logging.getLogger(__name__)
 
-def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut lineage via localCheckpoint. ``eager=False`` defers
-    materialization to the first consumer action (one job instead of
-    two when a known action follows immediately — guide §1/§5); the
-    checkpoint still computes exactly once and is shared by every
-    downstream branch."""
-    try:
-        return df.localCheckpoint(eager=eager)
-    except Exception:  # pragma: no cover - e.g. Connect servers w/o support
-        df.cache()
-        df.count()
-        return df
+
+def fixpoint(
+    seed: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    witness: Sequence[Column],
+    max_rounds: int,
+    name: str,
+    prev: tuple | None = None,
+) -> tuple[DataFrame, int]:
+    """Apply ``step(df, round)`` from ``seed`` until two consecutive
+    rounds give the same witness; return ``(frame, row count)``.
+
+    Each round cuts lineage with a LAZY localCheckpoint (self-join
+    rounds would otherwise grow the plan exponentially) and runs ONE
+    aggregate action — ``count(*)`` plus the caller's ``witness``
+    aggregates — which also materializes the checkpoint: one job per
+    round, where an eager checkpoint plus a count pays two. The count
+    is always in the tuple, so an empty frame (NULL sums) converges.
+    ``prev`` is the seed's witness when the caller already knows it,
+    letting the first round converge. Logs one ``debug`` line per round.
+
+    Raises ``RuntimeError`` after ``max_rounds`` rounds without a
+    repeat: a partial result would silently under-merge clusters or
+    under-close a hierarchy.
+    """
+    df = seed
+    for rnd in range(max_rounds):
+        df = step(df, rnd).localCheckpoint(eager=False)
+        sig = tuple(df.agg(F.count("*"), *witness).collect()[0])
+        _log.debug("%s round %d: rows=%d witness=%s", name, rnd, sig[0], sig[1:])
+        if sig == prev:
+            return df, sig[0]
+        prev = sig
+    raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
 
 
 #: pointer-jump schedule: rounds BEFORE this index run plain min-label
@@ -94,6 +122,16 @@ def connected_components(
     would silently under-merge clusters, which for dedup means silently
     under-deleting.
     """
+    return _components(edges, src, dst, max_iter)[0]
+
+
+def _components(
+    edges: DataFrame, src: str, dst: str, max_iter: int
+) -> tuple[DataFrame, int]:
+    """:func:`connected_components` plus its row count, which the
+    convergence witness already paid for — consumers size a broadcast
+    join by it without a fresh count action (guide §3.1: checkpointed
+    frames have no stats, so AQE would plan a sort-merge join)."""
     # Materialize the (possibly expensive — LSH pipelines) edge input
     # ONCE; both the node set and the bidirectional edge table derive
     # from the checkpoint, so neither branch replays the upstream plan.
@@ -102,21 +140,15 @@ def connected_components(
     # materializes nodes and bidir as CONCURRENT AQE stages, each
     # replaying the un-checkpointed upstream (the LSH pair pipeline)
     # before any shared cache exists — the eager job computes it once.
-    ends = _truncate_lineage(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    )
+    ends = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    ends = ends.localCheckpoint()
     # Node set from ALL endpoints (a self-loop-only node is still a node);
     # self-loops are then useless for propagation and dropped.
     nodes = ends.select("u").unionAll(ends.select(F.col("v").alias("u"))).distinct()
     bidir = ends.filter(F.col("u") != F.col("v"))
     bidir = bidir.unionAll(bidir.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    labels = nodes.select("u").select(
-        F.col("u").alias("node"), F.col("u").alias("comp")
-    )
-    prev_sum = None
-    converged = False
-    for _round in range(max_iter):
+    def propagate(labels: DataFrame, rnd: int) -> DataFrame:
         # 1. propagate the neighbour minimum into each node's label.
         prop = bidir.join(labels, bidir["u"] == labels["node"]).select(
             F.col("v").alias("node"), F.col("comp")
@@ -134,7 +166,7 @@ def connected_components(
         #    So the first _PTR_JUMP_START rounds propagate only; if the
         #    fixpoint still has not landed (real diameter), jumping
         #    switches on for every later round.
-        n_jumps = _PTR_JUMPS if _round >= _PTR_JUMP_START else 0
+        n_jumps = _PTR_JUMPS if rnd >= _PTR_JUMP_START else 0
         for _hop in range(n_jumps):
             hop = new.select(
                 F.col("node").alias("c_node"), F.col("comp").alias("c_comp")
@@ -143,44 +175,19 @@ def connected_components(
                 new.join(hop, new["comp"] == hop["c_node"], "left")
                 .select("node", F.coalesce("c_comp", "comp").alias("comp"))
             )
-        # 3. monotone convergence witness (labels never increase).
-        #    decimal(38,0) sum: with wide node ids (e.g. 60-bit md5_60)
-        #    a plain long sum can overflow and raise under ANSI mode —
-        #    same guard as the contraction variant's witness.
-        #    LAZY localCheckpoint: lineage is cut to a flat LogicalRDD
-        #    immediately (the self-join rounds would otherwise grow the
-        #    plan exponentially), but materialization piggybacks on the
-        #    witness action — ONE job per round where the eager form
-        #    pays a separate materialization pass (measured 2× per-round).
-        new = new.localCheckpoint(eager=False)
-        row = new.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        labels = new
-        # (n, s) TUPLE witness, matching the contraction variant: a bare
-        # scalar sentinel (None) collides with the NULL sum of an EMPTY
-        # node set, which then burns every round and raises on what is a
-        # trivially-converged input.
-        sig = (row["n"], row["s"])
-        if sig == prev_sum:
-            converged = True
-            break
-        prev_sum = sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "the component diameter exceeds the round budget — raise max_iter"
-        )
-    out = labels.select("node", F.col("comp").alias("component"))
-    # The convergence witness already counted the labelled nodes — ride
-    # that exact row count on the result object (plan metadata, dies
-    # with the DataFrame) so consumers can pick a broadcast join for
-    # small label tables without paying a fresh count action (r16,
-    # guide §3.1: checkpointed frames have no stats, so AQE would plan
-    # a sort-merge join against the full doc corpus otherwise).
-    out._pofs_rows = prev_sum[0]
-    return out
+        return new
+
+    # 3. monotone convergence witness (labels never increase): the
+    #    label sum. decimal(38,0): with wide node ids (e.g. 60-bit
+    #    md5_60) a plain long sum can overflow and raise under ANSI mode.
+    labels, rows = fixpoint(
+        nodes.select(F.col("u").alias("node"), F.col("u").alias("comp")),
+        propagate,
+        [F.sum(F.col("comp").cast("decimal(38,0)"))],
+        max_iter,
+        "connected_components",
+    )
+    return labels.select("node", F.col("comp").alias("component")), rows
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -218,9 +225,7 @@ def connected_components_contract(
     """
     # one materialization of the edge input; nodes and the canonical
     # edge set both read the checkpoint (see the label variant)
-    ends = _truncate_lineage(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    )
+    ends = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
     nodes = (
         ends.select(F.col("a").alias("node"))
         .unionAll(ends.select(F.col("b").alias("node")))
@@ -255,27 +260,15 @@ def connected_components_contract(
         centers = mins.select(F.col("a"), F.col("m").alias("b"))
         return _canonical(spokes.unionAll(centers))
 
-    prev = None
-    converged = False
-    for _ in range(max_iter):
-        # lazy localCheckpoint + witness action: flat lineage, one job
-        # per round (see the label-propagation variant for the rationale)
-        e = small_star(large_star(e)).localCheckpoint(eager=False)
-        row = e.agg(
-            F.count("*").alias("n"),
-            # decimal sum: order-independent witness immune to ANSI long
-            # overflow (xxhash64 values span the full int64 range)
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        sig = (row["n"], row["h"])
-        if sig == prev:
-            converged = True
-            break
-        prev = sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_contract did not converge in {max_iter} rounds"
-        )
+    e, _ = fixpoint(
+        e,
+        lambda cano, _rnd: small_star(large_star(cano)),
+        # decimal sum: order-independent witness immune to ANSI long
+        # overflow (xxhash64 values span the full int64 range)
+        [F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))],
+        max_iter,
+        "connected_components_contract",
+    )
     # fixpoint is a union of stars: every non-root appears as `a` exactly
     # once with b = its root; roots (and self-loop-only nodes) label
     # themselves
@@ -314,20 +307,16 @@ def pagerank(
 
     Output: (node, rank); ranks sum to 1 up to float error.
     """
-    ends = _truncate_lineage(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    )
+    ends = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
     nodes = ends.select("u").unionAll(ends.select(F.col("v").alias("u"))).distinct()
     outdeg = ends.groupBy("u").agg(F.count("*").alias("__deg"))
     # (node, __deg) computed ONCE and checkpointed: the r14 form joined
     # outdeg back into the rank table EVERY round (5 extra joins + 5
     # extra lazy checkpoints of driver-plan work for an iteration-
     # invariant table). __deg is NULL for dangling nodes.
-    nd = _truncate_lineage(
-        nodes.join(outdeg, nodes["u"] == outdeg["u"], "left").select(
-            nodes["u"].alias("node"), F.col("__deg")
-        )
-    )
+    nd = nodes.join(outdeg, nodes["u"] == outdeg["u"], "left").select(
+        nodes["u"].alias("node"), F.col("__deg")
+    ).localCheckpoint()
     n = nd.count()
     if n == 0:
         return nd.select(F.col("node"), F.lit(0.0).alias("rank"))
@@ -385,7 +374,7 @@ def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Dedup a (possibly directed, duplicated) edge list to canonical
     undirected pairs (a < b), dropping self-loops and NULL endpoints;
     lineage-truncated because every caller references it repeatedly."""
-    return _truncate_lineage(
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -393,6 +382,7 @@ def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
+        .localCheckpoint()
     )
 
 
@@ -463,7 +453,7 @@ def triangle_count(
     # exchange REPLACES the join's own — it is not an extra shuffle.
     par = oriented.sparkSession.sparkContext.defaultParallelism
     oriented = oriented.repartition(par, "u")
-    oriented = _truncate_lineage(oriented)  # referenced 3x in either branch
+    oriented = oriented.localCheckpoint()  # referenced 3x in either branch
     # The checkpoint makes the edge count a near-free job; it picks the
     # counting strategy (same 1M gate the r15 closing-set broadcast
     # used — AQE cannot size through a checkpoint).
@@ -580,10 +570,10 @@ def k_core(
     Each round is one degree aggregate plus two LEFT SEMI joins of the
     edge list against the surviving-node set (shuffle keys: node id;
     edge payload: two longs — never attributes). Rounds are
-    data-dependent (≤ peeling depth, typically ≪ node count); lineage
-    truncates per round and the convergence witness is the 1-row edge
-    count that round already needs. Raises after ``max_iter`` rounds
-    rather than silently returning an unpeeled graph.
+    data-dependent (≤ peeling depth, typically ≪ node count) and run
+    through :func:`fixpoint` with the edge count as the witness.
+    Raises after ``max_iter`` rounds rather than silently returning an
+    unpeeled graph.
 
     Output: (node, degree) for k-core members, degree measured inside
     the core.
@@ -591,26 +581,16 @@ def k_core(
     if k < 1:
         raise ValueError("k must be >= 1")
     e = _canonical_undirected(edges, src, dst)
-    n_edges = e.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
-        deg = _undirected_degrees(e)
-        keep = deg.filter(F.col("d") >= k).select("n")
-        e2 = _truncate_lineage(
-            e.join(keep, e["a"] == keep["n"], "left_semi").join(
-                keep, F.col("b") == keep["n"], "left_semi"
-            )
+
+    def peel(cur: DataFrame, _rnd: int) -> DataFrame:
+        keep = _undirected_degrees(cur).filter(F.col("d") >= k).select("n")
+        return cur.join(keep, cur["a"] == keep["n"], "left_semi").join(
+            keep, F.col("b") == keep["n"], "left_semi"
         )
-        n2 = e2.count()
-        if n2 == n_edges:
-            # no edge lost => every remaining node already has degree >= k
-            break
-        e, n_edges = e2, n2
-    else:
-        raise RuntimeError(
-            f"k_core did not converge within {max_iter} peeling rounds"
-        )
+
+    # the seed's edge count is the first witness: an already-peeled
+    # graph (no edge lost => every degree >= k) converges in ONE round
+    e, _ = fixpoint(e, peel, [], max_iter, "k_core", prev=(e.count(),))
     return (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -873,9 +853,8 @@ def hits(
             "authority vector is undefined and hubs would be the "
             "unnormalized all-ones seed"
         )
-    e = _truncate_lineage(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    )
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
+    e = e.localCheckpoint()
 
     def rnd(c):
         return F.round(c, term_dp) if term_dp is not None else c
@@ -1029,9 +1008,7 @@ def label_propagation(
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    ends = _truncate_lineage(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    )
+    ends = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
     nodes = (
         ends.select("u")
         .unionAll(ends.select(F.col("v").alias("u")))

@@ -1,7 +1,9 @@
 """Connected components + cluster dedup + chunking vs plain-Python references."""
 
 import random
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from parquet_on_fhir_spark.operators.dedup import near_dup_clusters
@@ -135,6 +137,110 @@ def test_cc_raises_on_round_budget(spark):
     assert {r["component"] for r in got} == {0}
 
 
+def _closure_edges(spark, pairs):
+    return spark.createDataFrame(
+        [("s", f"c{a}", f"c{b}") for a, b in pairs],
+        "system string, parent string, child string",
+    )
+
+
+def _chain(n):
+    return [(i, i + 1) for i in range(n - 1)]
+
+
+def _raise_concept_closure(spark):
+    from parquet_on_fhir_spark.fhir.terminology import concept_closure
+
+    # depth-9 chain: paths of 8 edges need 3 doubling rounds + 1 witness
+    concept_closure(_closure_edges(spark, _chain(9)), max_rounds=2)
+
+
+def _raise_closure_delta(spark):
+    from parquet_on_fhir_spark.fhir.terminology import (
+        closure_delta,
+        concept_closure,
+    )
+
+    old = concept_closure(_closure_edges(spark, [(0, 1)]))
+    # the new edges continue the chain c1 > c2 > ... > c9
+    closure_delta(old, _closure_edges(spark, _chain(10)[1:]), max_rounds=2)
+
+
+def _raise_k_core(spark):
+    from parquet_on_fhir_spark.operators.graph import k_core
+
+    # the cascading peel: 4 -> 2 -> 0 edges, then the repeat
+    df = spark.createDataFrame(_chain(6)[1:], "src int, dst int")
+    k_core(df, 2, max_iter=2)
+
+
+def _raise_cc(spark):
+    df = spark.createDataFrame(_chain(60), "src long, dst long")
+    connected_components(df, "src", "dst", max_iter=2)
+
+
+def _raise_cc_contract(spark):
+    from parquet_on_fhir_spark.operators.graph import connected_components_contract
+
+    df = spark.createDataFrame(_chain(60), "src long, dst long")
+    connected_components_contract(df, "src", "dst", max_iter=2)
+
+
+_TOO_FEW_ROUNDS = {
+    "concept_closure": _raise_concept_closure,
+    "closure_delta": _raise_closure_delta,
+    "k_core": _raise_k_core,
+    "connected_components": _raise_cc,
+    "connected_components_contract": _raise_cc_contract,
+}
+
+
+@pytest.mark.parametrize("name", list(_TOO_FEW_ROUNDS))
+def test_fixpoints_raise_the_same_way(spark, name):
+    """Every convergence-tested loop runs through graph.fixpoint, so a
+    round budget too small for the input fails with one message."""
+    with pytest.raises(RuntimeError, match=rf"^{name} did not converge in 2 rounds$"):
+        _TOO_FEW_ROUNDS[name](spark)
+
+
+def _count_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started (job group)."""
+    sc = spark.sparkContext
+    group = f"job-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_closure_fixpoint_one_job_per_round(spark):
+    """Each doubling round is ONE job (lazy checkpoint + the witness
+    count); AQE is off under the metadata guard, so counts repeat."""
+    from parquet_on_fhir_spark.fhir.terminology import (
+        closure_delta,
+        concept_closure,
+    )
+
+    chain = _closure_edges(spark, _chain(9))
+    # 3 doubling rounds close paths of 8 edges; the 4th repeats the count
+    clo, jobs = _count_jobs(spark, lambda: concept_closure(chain))
+    assert jobs == 4 and clo.count() == 36
+    old = concept_closure(_closure_edges(spark, [(0, 1)]))
+    new = _closure_edges(spark, [(1, 2)])
+    # the bridged seed {c1>c2, c0>c2} is already closed: round 1 doubles
+    # it, round 2 repeats the count
+    delta, jobs = _count_jobs(spark, lambda: closure_delta(old, new))
+    assert jobs == 2
+    assert {(r.ancestor, r.descendant) for r in delta.collect()} == {
+        ("c1", "c2"),
+        ("c0", "c2"),
+    }
+
+
 def _check_contract(spark, edges, max_iter=40):
     from parquet_on_fhir_spark.operators.graph import connected_components_contract
 
@@ -229,19 +335,18 @@ def test_zorder_key_matches_python(spark, pts):
     assert sorted(got) == sorted(pyz(a, b) for a, b in pts)
 
 
-def test_near_dup_clusters_contract_algorithm(spark):
+def test_near_dup_clusters_pair_and_singleton(spark):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog again and again"),
         (2, "the quick brown fox jumps over the lazy dog again and again!"),
         (3, "completely different text about spark query engines at scale"),
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    for alg in ("label", "contract"):
-        out = near_dup_clusters(
-            df, "text", "doc_id", num_bands=16, jaccard_threshold=0.3, algorithm=alg
-        ).collect()
-        comp = {r["doc_id"]: r["component"] for r in out}
-        assert comp[1] == comp[2] == 1 and comp[3] == 3, alg
+    out = near_dup_clusters(
+        df, "text", "doc_id", num_bands=16, jaccard_threshold=0.3
+    ).collect()
+    comp = {r["doc_id"]: r["component"] for r in out}
+    assert comp[1] == comp[2] == 1 and comp[3] == 3
 
 
 def test_connected_components_empty_edges(spark):

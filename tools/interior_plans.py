@@ -36,7 +36,6 @@ def dump(spark, name: str, df) -> None:
 def main() -> None:
     spark = get_session("interior-plans")
     from parquet_on_fhir_spark.api import load_table
-    from parquet_on_fhir_spark.operators.graph import _truncate_lineage
 
     li = load_table(spark, SF, "lineitem")
     edges = li.select(
@@ -45,9 +44,7 @@ def main() -> None:
     )
 
     # --- connected_components round 1 (the q108/q120 fixpoint body) ---
-    ends = _truncate_lineage(
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    )
+    ends = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).localCheckpoint()
     nodes = (
         ends.select("u").unionAll(ends.select(F.col("v").alias("u"))).distinct()
     )
