@@ -110,12 +110,14 @@ def encode_ndjson_tolerant(
     with_corrupt = T.StructType(
         list(schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
     )
+    # required: the corrupt-record column can't be queried off a bare
+    # scan; a lazy checkpoint parses the file once for both outputs
     df = (
         spark.read.schema(with_corrupt)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(ndjson_path)
-    ).cache()  # required: corrupt-record column can't be queried off a bare scan
+    ).localCheckpoint(eager=False)
     bad = df.filter(df["_corrupt_record"].isNotNull()).select("_corrupt_record")
     good = df.filter(df["_corrupt_record"].isNull()).drop("_corrupt_record")
     if annotations:

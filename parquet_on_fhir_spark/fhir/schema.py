@@ -138,9 +138,3 @@ def derive_schema(
         # required discriminator (README.md:29-41)
         out = T.StructType(list(out.fields) + [T.StructField("resourceType", T.StringType(), True)])
     return out
-
-
-def schema_from_parquet(spark: SparkSession, parquet_path: str) -> T.StructType:
-    """Schema of an existing Parquet-on-FHIR table (e.g. the reference's
-    example files) — used when re-encoding decoded JSON."""
-    return spark.read.parquet(parquet_path).schema

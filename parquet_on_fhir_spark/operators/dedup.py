@@ -303,12 +303,12 @@ def minhash_lsh_pairs(
             "trailing signature positions would be silently ignored"
         )
     # The signature table is referenced THREE times below (banding +
-    # both pair-side re-attach joins); without persistence each branch
-    # replays the full MinHash-over-text computation — by far the most
-    # expensive part of the pipeline. Persist the NARROW (id, minhash)
-    # projection once (n_docs × ~260 B — MEMORY_AND_DISK, LRU-evicted);
-    # the q108 cluster pipeline measured 1.9× faster end-to-end.
-    sigs = sig_df.select(F.col(id_col), F.col("minhash")).persist()
+    # both pair-side re-attach joins); without materialization each
+    # branch replays the full MinHash-over-text computation — by far the
+    # most expensive part of the pipeline. Checkpoint the NARROW
+    # (id, minhash) projection lazily (n_docs × ~260 B): the first job
+    # that reads it computes it once, and its blocks go with the frame.
+    sigs = sig_df.select(F.col(id_col), F.col("minhash")).localCheckpoint(eager=False)
     banded = _band_signatures(sigs, id_col, num_bands, hash_family)
     banded = _cap_buckets(banded, ["band", "bucket"], max_bucket_size, log_dropped)
 
@@ -636,15 +636,17 @@ def duplicate_spans(
 
     # pos feeds BOTH the duplicated-hash count and the join back; the
     # branches don't plan a ReusedExchange (different partition keys
-    # survive AQE), so without persistence the n-gram hash explode runs
-    # twice over the full corpus. Persisting the narrow (id, pos, h)
-    # rows (~24 B each, MEMORY_AND_DISK) is the standard two-pass
+    # survive AQE), so without materialization the n-gram hash explode
+    # runs twice over the full corpus. A lazy checkpoint of the narrow
+    # (id, pos, h) rows (~24 B each) is the standard two-pass
     # materialization — it holds exactly what a shuffle of the same
     # rows would have written to local disk anyway.
     pos = df.select(
         F.col(id_col),
         F.explode(F.transform(F.array(words), per_ws)[0]).alias("ph"),
-    ).select(id_col, F.col("ph.pos").alias("pos"), F.col("ph.h").alias("h")).persist()
+    ).select(
+        id_col, F.col("ph.pos").alias("pos"), F.col("ph.h").alias("h")
+    ).localCheckpoint(eager=False)
     dup_h = (
         pos.groupBy("h").agg(F.count("*").alias("__c")).filter(F.col("__c") >= min_repeats)
     )
@@ -713,18 +715,19 @@ def incremental_dedup(
     )
     if jaccard_threshold is None:
         return survivors
-    # Multiply-referenced intermediates persist once (MEMORY_AND_DISK,
-    # LRU): survivors feeds both signature computation and the final
-    # anti-join (it is the small ingestion batch — cheap to hold); each
-    # signature table feeds banding AND pair re-attach, and replaying
-    # either means recomputing MinHash over text.
-    survivors = survivors.persist()
+    # Multiply-referenced intermediates are checkpointed lazily (each is
+    # computed once, by the first job that reads it): survivors feeds
+    # both signature computation and the final anti-join (it is the
+    # small ingestion batch — cheap to hold); each signature table feeds
+    # banding AND pair re-attach, and replaying either means recomputing
+    # MinHash over text.
+    survivors = survivors.localCheckpoint(eager=False)
     new_sigs = minhash_signatures(
         survivors, text_col, id_col, num_hashes=num_hashes, k=k, hash_family=hash_family
-    ).select(F.col(id_col), F.col("minhash")).persist()
+    ).select(F.col(id_col), F.col("minhash")).localCheckpoint(eager=False)
     kept_sigs = minhash_signatures(
         kept_docs, text_col, id_col, num_hashes=num_hashes, k=k, hash_family=hash_family
-    ).select(F.col(id_col), F.col("minhash")).persist()
+    ).select(F.col(id_col), F.col("minhash")).localCheckpoint(eager=False)
     new_banded = _band_signatures(new_sigs, id_col, num_bands, hash_family).select(
         F.col(id_col).alias("__nid"), "band", "bucket"
     )
@@ -824,7 +827,8 @@ def semantic_dedup(
             array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
         )
     ).select(F.col(id_col), F.col(vec_col), F.col("prediction").alias("cell"))
-    assigned = assigned.persist()  # feeds capping, both pair sides, and output
+    # feeds capping, both pair sides, and output: computed once
+    assigned = assigned.localCheckpoint(eager=False)
 
     capped = _cap_buckets(
         assigned.select(id_col, "cell"), ["cell"], max_cell_size, log_dropped=False

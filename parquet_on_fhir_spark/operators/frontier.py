@@ -101,7 +101,6 @@ def allocate_crawl_budget(
     *,
     host_col: str = "host",
     demand_col: str = "n_urls",
-    eager_cleanup: bool = True,
 ) -> DataFrame:
     """Largest-remainder (Hamilton) apportionment of ``budget`` fetch
     slots across hosts proportional to ``demand_col``:
@@ -131,35 +130,23 @@ def allocate_crawl_budget(
     the leftover seat count rides as a broadcast 1-row aggregate —
     ZERO driver actions on the host frame.
 
-    r16 rewrite (guide §2.4/§2.5): the r15 form used
-    ``repartitionByRange`` for the global order, whose boundaries are
-    SAMPLED per computation — forcing a scratch persist (so both
-    passes saw one sampling) plus an eager materialization per call,
-    and leaking that cache in lazy mode. The deterministic bucket is
-    correct WITHOUT any persist: both passes recompute the identical
-    bucket per row. Costs moved, honestly: the range sampling pass,
-    the scratch persist and its mandatory eager job are gone, but a
-    demand distribution whose remainders collapse to few distinct
-    values (e.g. perfectly uniform per-host demand → ONE shared
-    remainder) now lands its tied cohort in one bucket = one window
-    task, where sampled ranges spread ties by the (demand, host)
-    tie-break. Rows are ~50 B and the window is a narrow row_number,
-    so even a 10M-host tied cohort is a single-digit-seconds task —
-    accepted and documented rather than paying the per-call
-    sampling+persist tax on every well-spread (i.e. real) demand
-    distribution.
+    Cost of the fixed buckets (a ``repartitionByRange`` would spread
+    ties, but samples its boundaries on every computation): a demand
+    distribution whose remainders collapse to few distinct values (e.g.
+    perfectly uniform per-host demand → ONE shared remainder) lands its
+    tied cohort in one bucket = one window task. Rows are ~50 B and the
+    window is a narrow row_number, so even a 10M-host tied cohort is a
+    single-digit-seconds task.
 
-    ``eager_cleanup=True`` (default) persists the bucketed frame for
-    the duration of the call — a COST optimization only (the offsets
-    pass and the final pass would otherwise each recompute the demand
-    subtree; correctness no longer depends on shared state) —
-    materializes the result once (``localCheckpoint(eager=True)``)
-    and unpersists before returning. Pass ``eager_cleanup=False`` to
-    keep the fully lazy plan (plan-pin tests inspect it, and composed
-    pipelines like q328 let the consumer's single action compute it —
-    no scratch persist exists in this mode, so nothing can leak; the
-    demand subtree is computed twice, so materialize ``demand`` first
-    if it is expensive)."""
+    The bucketed frame is checkpointed lazily (``localCheckpoint(
+    eager=False)``): the offsets pass, the leftover scalar and the final
+    pass read one materialization of the demand subtree, computed by the
+    first job that reads it. So the offsets and the final pass agree on
+    every row's bucket even for a nondeterministic ``demand``, or a
+    ``double`` demand column whose sum depends on aggregation order.
+    Nothing registers in the SQL cache manager, so repeated calls leave
+    no cache behind. The window sits above the checkpoint, so the plan
+    keeps its ``__pid``-partitioned shape."""
     d = F.col(demand_col).cast("double")
     total = demand.agg(F.sum(demand_col).alias("__D"))
     # leftover seats as a broadcast scalar — when it is ≤ 0 every
@@ -187,11 +174,7 @@ def allocate_crawl_budget(
                 )
             ).cast("int"),
         )
-    )
-    if eager_cleanup:
-        from pyspark import StorageLevel
-
-        j = j.persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     leftover_col = j.agg(
         (F.lit(budget) - F.coalesce(F.sum("__q"), F.lit(0)))
         .cast("long")
@@ -234,13 +217,9 @@ def allocate_crawl_budget(
         F.col(demand_col).cast("long"),
         (F.col("__q") + F.col("__plus")).cast("long"),
     )
-    out = ranked.select(
+    return ranked.select(
         F.col(host_col), F.col(demand_col), alloc.alias("allocated")
     )
-    if eager_cleanup:
-        out = out.localCheckpoint(eager=True)
-        j.unpersist()
-    return out
 
 
 def anchor_text_topk(

@@ -104,8 +104,6 @@ def codec_available(kind: str = "image") -> bool:
 
     if kind == "image":
         return importlib.util.find_spec("PIL") is not None
-    if kind == "audio":
-        return importlib.util.find_spec("soundfile") is not None
     return False
 
 
@@ -1828,36 +1826,6 @@ def wav_features(content: bytes, mime: str | None = None) -> list[float]:
     crossings = int(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
     dur = n / sr
     return [float(sr), dur, rms, crossings / dur, float(np.abs(mono).max())]
-
-
-def best_audio_codec() -> FeatureCodec:
-    """Audio counterpart to :func:`best_codec`: a soundfile-backed real
-    decoder when the library is importable, else the built-in numpy
-    PCM-WAV codec (:func:`wav_features`) — which itself falls back to
-    the deterministic stand-in for payloads it cannot parse, so the
-    feature column stays populated across a mixed corpus."""
-    if not codec_available("audio"):
-        return wav_features
-
-    def soundfile_features(content: bytes, mime: str | None = None) -> list[float]:
-        import io
-
-        import numpy as np
-        import soundfile  # noqa: F401 - guarded by codec_available
-
-        data, sr = soundfile.read(io.BytesIO(content), always_2d=True)
-        mono = data.mean(axis=1)
-        n = len(mono)
-        if n == 0:
-            return [float(sr), 0.0, 0.0, 0.0, 0.0]
-        rms = float(np.sqrt(np.mean(mono * mono)))
-        crossings = int(
-            np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1]))
-        )
-        dur = n / sr
-        return [float(sr), dur, rms, crossings / dur, float(np.abs(mono).max())]
-
-    return soundfile_features
 
 
 # --- GIF (LZW) ------------------------------------------------------------------------

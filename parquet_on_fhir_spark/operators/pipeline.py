@@ -130,17 +130,15 @@ def _apply_token_budget(d: DataFrame, id_col: str, token_budget: int) -> DataFra
     docs share one exact 4-dp quality puts that bucket on one task —
     upstream exact+near dedup makes that regime unlikely.
 
-    The input is persisted (memory-with-disk-spill) before the histogram
-    pass: both passes — and the caller's final action — reuse one
-    materialization of the expensive upstream graph (two LSH shuffles +
-    signature computation) instead of recomputing it per action. At
-    cluster scale this is the standard two-pass checkpoint; the persist
-    is what makes the histogram cutoff strictly cheaper than a global
-    window, not merely better-partitioned.
+    The input is checkpointed lazily before the histogram pass: both
+    passes — and the caller's final action — reuse one materialization
+    of the expensive upstream graph (two LSH shuffles + signature
+    computation) instead of recomputing it per action. At cluster scale
+    this is the standard two-pass checkpoint; it is what makes the
+    histogram cutoff strictly cheaper than a global window, not merely
+    better-partitioned.
     """
-    from pyspark import StorageLevel
-
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
+    d = d.localCheckpoint(eager=False)
     hist = d.groupBy("quality").agg(F.sum("n_tokens").alias("__tot")).collect()
     buckets = sorted(hist, key=lambda r: -r["quality"])
     offset = 0

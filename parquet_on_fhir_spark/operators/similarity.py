@@ -368,15 +368,15 @@ def embedding_moments(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
             )
 
     # Referenced three times below (count / per-dim sums / Gram rows);
-    # without persistence each branch re-runs the corpus scan + matmul
-    # (the plan showed 4 ReadSchema on the source). The persisted frame
-    # is dim²/2 + dim + 1 rows — trivially cacheable at any dim.
+    # without materialization each branch re-runs the corpus scan +
+    # matmul (the plan showed 4 ReadSchema on the source). The lazily
+    # checkpointed frame is dim²/2 + dim + 1 rows — small at any dim.
     agg = (
         df.select(vec_col)
         .mapInPandas(partials, part_schema)
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     n = agg.filter(F.col("i") == -1).select(F.col("s").alias("_cnt"))
     sums = agg.filter((F.col("j") == -1) & (F.col("i") >= 0))

@@ -46,81 +46,3 @@ def read_binary_files(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def read_jdbc(
-    spark: SparkSession, url: str, table: str, **options: str
-) -> DataFrame:  # pragma: no cover
-    """JDBC source — needs the database driver jar on the classpath
-    (none shipped in this image). Partition options (partitionColumn,
-    lowerBound, upperBound, numPartitions) make the read parallel."""
-    try:
-        return (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .options(**options)
-            .load()
-        )
-    except Exception as e:
-        raise NotImplementedError(
-            "JDBC read requires the driver jar on the classpath; add it via "
-            "spark.jars / spark.jars.packages"
-        ) from e
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:  # pragma: no cover
-    """Delta Lake needs delta-spark jars on the classpath — not in this
-    image (delta.io/learn quickstart documents the required jars)."""
-    try:
-        return spark.read.format("delta").load(path)
-    except Exception as e:  # jar missing
-        raise NotImplementedError(
-            "Delta Lake connector requires the delta-spark artifact on the "
-            "classpath; add it via spark.jars.packages"
-        ) from e
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:  # pragma: no cover
-    """Avro source. The spark-avro module is an external jar not shipped
-    in this image (verified 2026-08-13: 'Failed to find data source:
-    avro'); on a real cluster add
-    ``--packages org.apache.spark:spark-avro_2.13:<spark-version>``."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as e:  # AnalysisException: data source not found
-        raise NotImplementedError(
-            "avro needs the spark-avro jar (org.apache.spark:spark-avro_2.13)"
-        ) from e
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:  # pragma: no cover
-    """Kafka streaming source — the production entry for every streaming
-    operator in this repo (the file-stream sources in streaming/jobs.py
-    are the test-harness stand-in; the query graphs downstream are
-    identical). The sql-kafka connector is an external jar not shipped
-    in this image; on a real cluster add
-    ``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>``.
-
-    Returns the standard Kafka schema (key/value binary, topic,
-    partition, offset, timestamp); callers decode ``value`` with
-    from_json/from_avro per their payload.
-    """
-    try:
-        return (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", topic)
-            .option("startingOffsets", starting_offsets)
-            .load()
-        )
-    except Exception as e:  # AnalysisException: data source not found
-        raise NotImplementedError(
-            "kafka needs the sql-kafka jar "
-            "(org.apache.spark:spark-sql-kafka-0-10_2.13)"
-        ) from e

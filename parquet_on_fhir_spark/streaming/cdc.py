@@ -32,6 +32,15 @@ def _pointer_path(target_dir: str) -> str:
     return os.path.join(target_dir, "_LATEST")
 
 
+def _current_version(target_dir: str) -> str | None:
+    """Directory of the published version (None before the first batch)."""
+    ptr = _pointer_path(target_dir)
+    if not os.path.exists(ptr):
+        return None
+    with open(ptr) as fh:
+        return os.path.join(target_dir, fh.read().strip())
+
+
 def read_cdc_table(
     spark: SparkSession, target_dir: str, schema=None
 ) -> DataFrame | None:
@@ -39,15 +48,32 @@ def read_cdc_table(
     the first batch lands). ``schema`` skips parquet footer inference —
     the merge loop knows the table schema (it wrote it), and the
     inference pass is one extra job per micro-batch (r16, guide §1)."""
-    ptr = _pointer_path(target_dir)
-    if not os.path.exists(ptr):
+    version = _current_version(target_dir)
+    if version is None:
         return None
-    with open(ptr) as fh:
-        version = fh.read().strip()
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.parquet(os.path.join(target_dir, version))
+    return reader.parquet(version)
+
+
+def _check_no_drift(version: str, columns: list[str]) -> None:
+    """Raise if the batch's columns differ from the published table's.
+
+    The merge reads the target with the batch schema, so a drifted
+    batch would silently drop the columns it lacks and null-fill the
+    ones it adds. The stored names come from the parquet footer
+    (pyarrow, no Spark job)."""
+    import pyarrow.dataset as ds
+
+    stored = ds.dataset(version, format="parquet").schema.names
+    added = sorted(set(columns) - set(stored))
+    missing = sorted(set(stored) - set(columns))
+    if added or missing:
+        raise ValueError(
+            f"CDC schema drift against {version}: batch adds {added}, "
+            f"batch is missing {missing}"
+        )
 
 
 def apply_cdc_batch(
@@ -88,6 +114,9 @@ def apply_cdc_batch(
         ).drop(delete_col)
     else:
         upserts = latest
+    published = _current_version(target_dir)
+    if published is not None:
+        _check_no_drift(published, upserts.columns)
     current = read_cdc_table(spark, target_dir, schema=upserts.schema)
     version_dir = os.path.join(target_dir, f"v={batch_id}")
     if current is None:

@@ -32,11 +32,20 @@ _STREAM_CONF_LOCK = threading.Lock()
 
 @atexit.register
 def _cleanup_scratch() -> None:
-    """tmpfs checkpoints and staged stream sources accumulate across a
-    long test/bench session (RAM-backed in the /dev/shm case); remove
-    whatever per-run cleanup missed."""
+    """tmpfs checkpoints, staged stream sources and suite scratch
+    tables accumulate across a long test/bench session (RAM-backed in
+    the /dev/shm case); remove whatever per-run cleanup missed."""
     for d in _SCRATCH_DIRS:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def scratch_dir(prefix: str, base: str | None = None) -> str:
+    """A fresh ``mkdtemp`` directory, removed at process exit. For
+    scratch whose files a returned lazy frame still reads, so the
+    caller cannot remove it itself."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=base)
+    _SCRATCH_DIRS.append(d)
+    return d
 
 
 def _ckpt_dir() -> str:
@@ -48,9 +57,7 @@ def _ckpt_dir() -> str:
     checkpoints are discarded (rmtree'd right after awaitTermination,
     with an atexit sweep as backstop)."""
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix="pofs_ckpt_", dir=base)
-    _SCRATCH_DIRS.append(d)
-    return d
+    return scratch_dir("pofs_ckpt_", base)
 
 EVENTS_LONG_SCHEMA = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, "
@@ -124,7 +131,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if src is None:
         # one staged copy per sf_dir per process (the file-stream source
         # needs a directory it owns; the copy itself is immutable)
-        src = tempfile.mkdtemp(prefix="pofs_stream_src_")
+        src = scratch_dir("pofs_stream_src_")
         _stage_parquet(f"{sf_dir}/events.parquet", src)
         _SRC_CACHE[sf_dir] = src
     sdf = spark.readStream.schema(EVENTS_LONG_SCHEMA).parquet(src)
@@ -147,8 +154,7 @@ def _stage_events_split(sf_dir: str, n_files: int) -> str:
         tbl = pq.read_table(f"{sf_dir}/events.parquet").sort_by(
             [("ts", "ascending"), ("event_id", "ascending")]
         )
-        src = tempfile.mkdtemp(prefix="pofs_stream_split_")
-        _SCRATCH_DIRS.append(src)
+        src = scratch_dir("pofs_stream_split_")
         step = (tbl.num_rows + n_files - 1) // n_files
         base_mtime = 1_000_000_000  # arbitrary fixed epoch; only order matters
         for i in range(n_files):
@@ -248,7 +254,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = f"{sf_dir}::documents"
     src = _SRC_CACHE.get(key)
     if src is None:
-        src = tempfile.mkdtemp(prefix="pofs_stream_docs_")
+        src = scratch_dir("pofs_stream_docs_")
         _stage_parquet(f"{sf_dir}/documents.parquet", src)
         _SRC_CACHE[key] = src
     schema = (

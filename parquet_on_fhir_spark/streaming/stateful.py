@@ -44,43 +44,3 @@ def running_user_totals(events_stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def running_user_totals_tws(events_stream: DataFrame) -> DataFrame:  # pragma: no cover
-    """Same operator on the newer ``transformWithStateInPandas`` API
-    (Spark 4 StatefulProcessor: named value/list/map state, timers, TTL).
-
-    NOT runnable in this container: the API's driver-side runner needs a
-    working ``google.protobuf`` install, which this image lacks
-    (ModuleNotFoundError: No module named 'google' — re-verified r13,
-    2026-08-16; no wheel on disk, no network, so vendoring is not an
-    option either). Kept as the documented migration target;
-    ``running_user_totals`` (applyInPandasWithState) is the supported
-    path here.
-    """
-    import pandas as pd  # noqa: F811
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self):
-            pass
-
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        UserTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

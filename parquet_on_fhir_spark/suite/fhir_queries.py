@@ -9,8 +9,6 @@ conformance tests in tests/test_fhir_format.py.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from parquet_on_fhir_spark.fhir.annotations import annotate
@@ -19,6 +17,7 @@ from parquet_on_fhir_spark.fhir.encode import encode_ndjson
 from parquet_on_fhir_spark.fhir.merge import merge_tables
 from parquet_on_fhir_spark.fhir.validate import validate
 from parquet_on_fhir_spark.session import utc
+from parquet_on_fhir_spark.streaming.jobs import scratch_dir
 from parquet_on_fhir_spark.suite.common import local_df, Q, d4, ts_str
 
 PATIENT = "/root/reference/examples/Patient.parquet"
@@ -52,7 +51,7 @@ SELECT id, n.family AS family, n.given[1] AS first_given, gender, birthDate FROM
 # --- F3+F4: decode → re-encode round-trip ----------------------------------------
 def qf02(spark, sf_dir):
     p = utc(spark).read.parquet(PATIENT)
-    base = tempfile.mkdtemp(prefix="pofs_fhir_rt_")
+    base = scratch_dir("pofs_fhir_rt_")
     to_fhir_json(p).write.mode("overwrite").text(base)
     back = encode_ndjson(spark, base, resource_type="Patient")
     return back.select("id", "resourceType", "birthDate")
@@ -176,7 +175,7 @@ FROM v
 # --- F13: schema merge across sparse tables of one resource type -----------------------
 def qf05(spark, sf_dir):
     p = utc(spark).read.parquet(PATIENT)
-    base = tempfile.mkdtemp(prefix="pofs_fhir_merge_")
+    base = scratch_dir("pofs_fhir_merge_")
     p.select("resourceType", "id", "gender").write.mode("overwrite").parquet(f"{base}/a")
     p.select("resourceType", "id", "birthDate", "maritalStatus").write.mode(
         "overwrite"
@@ -558,7 +557,7 @@ def _encode_doc(spark, doc, rtype):
     import json as _json
 
     docs = doc if isinstance(doc, list) else [doc]
-    base = tempfile.mkdtemp(prefix=f"pofs_term_{rtype}_")
+    base = scratch_dir(f"pofs_term_{rtype}_")
     with open(f"{base}/r.ndjson", "w") as fh:
         for d in docs:
             fh.write(_json.dumps(d) + "\n")
@@ -2971,8 +2970,8 @@ def qf46(spark, sf_dir):
 
     from parquet_on_fhir_spark.fhir.encode import unbundle_ndjson
 
-    src = tempfile.mkdtemp(prefix="pofs_qf46_src_")
-    out = tempfile.mkdtemp(prefix="pofs_qf46_out_")
+    src = scratch_dir("pofs_qf46_src_")
+    out = scratch_dir("pofs_qf46_out_")
     with open(f"{src}/bundles.ndjson", "w") as fh:
         fh.write(bundle("p1", "male", "o1", "72.50") + "\n")
         fh.write(bundle("p2", "female", "o2", "98.6") + "\n")

@@ -5074,8 +5074,8 @@ def q312(spark, sf_dir):
     of 1000 fetch slots across hosts proportional to demand, capped at
     each host's own demand. Demand = orders per host bucket
     (o_custkey%97). The exact global remainder rank is computed
-    WITHOUT a SinglePartition window (repartitionByRange +
-    per-partition offsets, the token-budget discipline) — pinned in
+    WITHOUT a SinglePartition window (remainder buckets + per-bucket
+    offsets, the token-budget discipline) — pinned in
     tests/test_scale_plans.py."""
     from parquet_on_fhir_spark.operators.frontier import (
         allocate_crawl_budget,
@@ -6040,11 +6040,9 @@ def q328(spark, sf_dir):
     frontier = frontier.localCheckpoint(eager=True)
 
     demand = frontier.groupBy("host").agg(F.count("*").alias("n_urls"))
-    # lazy budget (r16): the frontier is already checkpointed, so the
-    # twice-computed demand subtree is one cheap aggregate — letting
-    # the final action compute the whole Hamilton plan drops the
-    # per-call eager materialization job and scratch persist.
-    alloc = allocate_crawl_budget(demand, 60, eager_cleanup=False)
+    # the budget checkpoints its bucketed frame lazily, so the final
+    # action computes the whole Hamilton plan once
+    alloc = allocate_crawl_budget(demand, 60)
 
     robots = local_df(spark, 
         [

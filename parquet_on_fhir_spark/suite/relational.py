@@ -18,6 +18,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from parquet_on_fhir_spark.operators.joins import as_of_join
+from parquet_on_fhir_spark.streaming.jobs import scratch_dir
 from parquet_on_fhir_spark.suite.common import Q, d2, d4, t, ts_str
 
 EVENT_TS_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -106,7 +107,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
 # --- Q2: schema-merged multi-file scan (spec merge, README.md:20-22) ------
 def q02(spark, sf_dir):
     r = t(spark, sf_dir, "region")
-    base = tempfile.mkdtemp(prefix="pofs_merge_")
+    base = scratch_dir("pofs_merge_")
     r.select("r_regionkey", "r_name").write.mode("overwrite").parquet(f"{base}/a")
     r.select(
         "r_regionkey", F.upper("r_name").alias("r_name_upper")
@@ -124,7 +125,7 @@ SELECT r_regionkey, NULL AS r_name, upper(r_name) AS r_name_upper FROM region
 # --- Q3: NDJSON source with explicit schema -------------------------------
 def q03(spark, sf_dir):
     n = t(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="pofs_ndjson_")
+    base = scratch_dir("pofs_ndjson_")
     n.write.mode("overwrite").json(base)
     schema = "n_nationkey INT, n_name STRING, n_regionkey INT"
     return spark.read.schema(schema).json(base).select(
@@ -138,7 +139,7 @@ Q03_ORACLE = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
 # --- Q4: CSV source --------------------------------------------------------
 def q04(spark, sf_dir):
     r = t(spark, sf_dir, "region")
-    base = tempfile.mkdtemp(prefix="pofs_csv_")
+    base = scratch_dir("pofs_csv_")
     r.write.mode("overwrite").option("header", "true").csv(base)
     schema = "r_regionkey INT, r_name STRING"
     return spark.read.option("header", "true").schema(schema).csv(base)
@@ -153,7 +154,7 @@ def q05(spark, sf_dir):
     agg = l.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"), d2(F.sum("l_extendedprice")).alias("total")
     )
-    base = tempfile.mkdtemp(prefix="pofs_sink_")
+    base = scratch_dir("pofs_sink_")
     agg.write.mode("overwrite").option("compression", "snappy").parquet(base)
     return spark.read.parquet(base)
 
@@ -167,7 +168,7 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 # --- Q6: partitioned sink (hive-style dirs; partition pruning on read) ----
 def q06(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="pofs_part_")
+    base = scratch_dir("pofs_part_")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
     back = spark.read.parquet(base)
     # partition-pruned read: only the 'F' directory is scanned
@@ -967,7 +968,7 @@ FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
 # --- Q77: ORC source/sink round-trip ---------------------------------------------------
 def q77(spark, sf_dir):
     n = t(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="pofs_orc_")
+    base = scratch_dir("pofs_orc_")
     n.write.mode("overwrite").orc(base)
     return spark.read.orc(base)
 
@@ -1265,12 +1266,10 @@ def q94(spark, sf_dir):
     clustering key before writing, so per-file min-max footers prune
     selective scans (tests/test_scale_plans.py asserts the disjoint
     ranges; here the row set round-trips exactly)."""
-    import tempfile
-
     from parquet_on_fhir_spark.operators.layout import write_clustered
 
     l = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    base = tempfile.mkdtemp(prefix="pofs_layout_")
+    base = scratch_dir("pofs_layout_")
     write_clustered(l, base, ["l_orderkey"], n_files=8)
     back = spark.read.parquet(base)
     return back.filter(F.col("l_orderkey") < 1000)
@@ -1622,12 +1621,10 @@ def q118(spark, sf_dir):
     (tests/test_scale_plans.py asserts tile disjointness); the Z-key
     arithmetic itself is oracle-checked bit-for-bit and the filtered
     round-trip row set is exact."""
-    import tempfile
-
     from parquet_on_fhir_spark.operators.layout import write_zordered, zorder_key
 
     l = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    base = tempfile.mkdtemp(prefix="pofs_zorder_")
+    base = scratch_dir("pofs_zorder_")
     write_zordered(l, base, "l_orderkey", "l_partkey", bits=21, n_files=8)
     back = spark.read.parquet(base)
     return back.filter(

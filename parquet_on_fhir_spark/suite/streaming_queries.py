@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from parquet_on_fhir_spark.streaming.jobs import (
     run_to_memory,
+    scratch_dir,
     stream_events,
     stream_events_multibatch,
 )
@@ -372,15 +373,15 @@ QUERIES = [
 # 'error' events act as tombstones. The oracle is the single-pass batch
 # fold — streaming N batches MUST land on the same table.
 def q164(spark, sf_dir):
-    import tempfile
-
     from parquet_on_fhir_spark.streaming.cdc import (
         read_cdc_table,
         stream_apply_cdc,
     )
     from parquet_on_fhir_spark.streaming.jobs import stream_events_multibatch
 
-    target = tempfile.mkdtemp(prefix="pofs_cdc_q164_")
+    # the result reads the target's files: scratch_dir defers their
+    # removal to process exit
+    target = scratch_dir("pofs_cdc_q164_")
     stream = stream_events_multibatch(spark, sf_dir, n_files=4).select(
         "user_id",
         "event_id",
@@ -395,12 +396,6 @@ def q164(spark, sf_dir):
     out = read_cdc_table(spark, target).select(
         "user_id", "event_id", "event_type", "value"
     )
-    # the result must outlive this function while its backing files sit
-    # in scratch: defer cleanup to process exit (a .cache() would not
-    # survive eviction once the directory is gone)
-    from parquet_on_fhir_spark.streaming.jobs import _SCRATCH_DIRS
-
-    _SCRATCH_DIRS.append(target)
     return out
 
 

@@ -4,6 +4,8 @@ the scan, salted joins match plain joins."""
 
 import tempfile
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from parquet_on_fhir_spark.api import load_table
@@ -708,9 +710,9 @@ def test_crawl_budget_has_no_single_partition_window(spark):
         F.concat(F.lit("h"), F.col("id")).alias("host"),
         (F.col("id") % 37 + 1).alias("n_urls"),
     )
-    # eager_cleanup=False keeps the lazy plan for inspection (default
-    # mode checkpoints it away — covered below)
-    out = allocate_crawl_budget(demand, 1234, eager_cleanup=False)
+    # the window sits above the bucket frame's lazy checkpoint, so the
+    # plan still shows how it is partitioned
+    out = allocate_crawl_budget(demand, 1234)
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -724,26 +726,51 @@ def test_crawl_budget_has_no_single_partition_window(spark):
     assert out.agg(F.sum("allocated")).collect()[0][0] == 1234
 
 
-def test_crawl_budget_default_mode_releases_cache(spark):
-    """r14 advice: the scratch persist that freezes the sampled range
-    partitioning must not outlive the call — default (eager_cleanup)
-    mode materializes the result and unpersists, so repeated calls
-    (bench reps, selfcheck sweeps) leave the SQL cache manager
-    empty."""
-    from parquet_on_fhir_spark.operators.frontier import (
-        allocate_crawl_budget,
-    )
-
-    demand = spark.range(0, 500).select(
-        F.concat(F.lit("h"), F.col("id")).alias("host"),
-        (F.col("id") % 37 + 1).alias("n_urls"),
-    )
+@pytest.mark.parametrize(
+    "case",
+    ["q67", "q86", "q108", "q113", "q120", "q131", "q146", "q312",
+     "encode_ndjson_tolerant"],
+)
+def test_operator_leaves_no_cache(spark, sf_dir, tmp_path, case):
+    """Operators materialize their multiply-read intermediates with a
+    lazy localCheckpoint, never persist/cache: a persisted plan stays in
+    the SQL cache manager for the life of the session, so every call
+    would leak one entry, and later calls with the same plan would
+    silently read it."""
     spark.catalog.clearCache()  # isolate from other tests' caches
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    for _ in range(2):
-        out = allocate_crawl_budget(demand, 123)
-        assert out.agg(F.sum("allocated")).collect()[0][0] == 123
-        assert cm.isEmpty(), "scratch persist leaked past the call"
+    if case == "encode_ndjson_tolerant":
+        from parquet_on_fhir_spark.fhir.encode import encode_ndjson_tolerant
+
+        (tmp_path / "p.ndjson").write_text(
+            '{"resourceType":"Patient","id":"p1"}\nNOT JSON {{\n'
+        )
+        good, bad = encode_ndjson_tolerant(
+            spark, str(tmp_path), resource_type="Patient"
+        )
+        assert [r.id for r in good.select("id").collect()] == ["p1"]
+        assert bad.count() == 1
+    else:
+        from parquet_on_fhir_spark.suite import all_queries
+
+        (q,) = [q for q in all_queries() if q.name.split("_")[0] == case]
+        assert q.fn(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_suite_scratch_dirs_are_swept(spark):
+    """Suite queries that write scratch files register the directory
+    for the process-exit sweep instead of leaving it in the temp dir."""
+    import os
+
+    from parquet_on_fhir_spark.streaming import jobs
+    from parquet_on_fhir_spark.suite.fhir_queries import qf12
+
+    before = len(jobs._SCRATCH_DIRS)
+    qf12(spark, None).collect()
+    names = sorted(os.path.basename(d) for d in jobs._SCRATCH_DIRS[before:])
+    assert len(names) == 2, names
+    assert names[0].startswith("pofs_term_CodeSystem_"), names
+    assert names[1].startswith("pofs_term_ValueSet_"), names
 
 
 def test_crawl_pipeline_plan_no_cartesian(spark, sf_dir):

@@ -343,6 +343,33 @@ def test_cdc_batch_replay_is_idempotent(spark):
         shutil.rmtree(target, ignore_errors=True)
 
 
+def test_cdc_schema_drift_raises(spark):
+    """A batch whose columns differ from the published table must fail,
+    not silently drop or null-fill a column in the merged table."""
+    import shutil
+
+    from parquet_on_fhir_spark.streaming.cdc import (
+        apply_cdc_batch,
+        read_cdc_table,
+    )
+
+    target = tempfile.mkdtemp(prefix="pofs_cdc_target_")
+    try:
+        b0 = spark.createDataFrame(
+            [(1, 10, "a", False)], "k int, seq int, v string, del boolean"
+        )
+        apply_cdc_batch(b0, 0, target, ["k"], "seq", "del")
+        b1 = spark.createDataFrame(
+            [(2, 11, "b", 7, False)], "k int, seq int, v string, w int, del boolean"
+        )
+        with pytest.raises(ValueError, match=r"adds \['w'\].*missing \[\]"):
+            apply_cdc_batch(b1, 1, target, ["k"], "seq", "del")
+        (row,) = read_cdc_table(spark, target).collect()  # v=0 still published
+        assert (row.k, row.v) == (1, "a")
+    finally:
+        shutil.rmtree(target, ignore_errors=True)
+
+
 def test_cdc_retention_prunes_old_versions(spark):
     import os
     import shutil

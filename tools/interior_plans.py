@@ -1,10 +1,10 @@
-"""Interior plan dumps for the iterative operators (r16 — VERDICT #6):
-the FINAL frame of a checkpointed fixpoint explains as an opaque
-``Scan ExistingRDD`` stub, so this tool reconstructs and dumps the
-PRE-CHECKPOINT round-1 plan of each loop — the plan every round
-actually runs — plus the lazy (eager_cleanup=False) form of the crawl
-budget, whose eager form checkpoints the evidence away. Output goes to
-``plans/r16/<name>_interior.txt``.
+"""Plan dumps for the iterative operators: the FINAL frame of a
+checkpointed fixpoint explains as an opaque ``Scan ExistingRDD`` stub,
+so this tool dumps plans the real operators build where the work is
+still visible — ``pagerank`` over five lazy rounds, the consumer-side
+shape of ``concept_closure``, and ``allocate_crawl_budget``, whose
+ranked pass sits above its lazily checkpointed bucket frame. Output
+goes to ``plans/r16/<name>_interior.txt``.
 
     python tools/interior_plans.py
 """
@@ -43,28 +43,12 @@ def main() -> None:
         (F.col("l_partkey") % 500).alias("dst"),
     )
 
-    # --- connected_components round 1 (the q108/q120 fixpoint body) ---
-    ends = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).localCheckpoint()
-    nodes = (
-        ends.select("u").unionAll(ends.select(F.col("v").alias("u"))).distinct()
-    )
-    bidir = ends.filter(F.col("u") != F.col("v"))
-    bidir = bidir.unionAll(
-        bidir.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = nodes.select(F.col("u").alias("node"), F.col("u").alias("comp"))
-    prop = bidir.join(labels, bidir["u"] == labels["node"]).select(
-        F.col("v").alias("node"), F.col("comp")
-    )
-    new = labels.unionAll(prop).groupBy("node").agg(F.min("comp").alias("comp"))
-    dump(spark, "connected_components_round1", new)
-
-    # --- pagerank round 1 (pre-checkpoint; the per-iteration body) ---
+    # --- pagerank, five lazy rounds (no per-round checkpoint) ---
     from parquet_on_fhir_spark.operators.graph import pagerank
 
     dump(spark, "pagerank_5rounds_lazy", pagerank(edges, iterations=5))
 
-    # --- concept_closure round 1 (the qf23/qf40 doubling body) ---
+    # --- concept_closure (the qf23/qf40 closure) ---
     from parquet_on_fhir_spark.fhir.terminology import (
         concept_closure,
         concept_edges,
@@ -75,37 +59,9 @@ def main() -> None:
     )
 
     cs = _encode_doc(spark, _CS_ANATOMY_PROPS_DOC, "CodeSystem")
-    e = concept_edges(cs)
-    clo = (
-        e.select(
-            "system",
-            F.col("parent").alias("ancestor"),
-            F.col("child").alias("descendant"),
-        )
-        .distinct()
-        .coalesce(1)
-        .localCheckpoint(eager=False)
-    )
-    hop = clo.select(
-        F.col("system").alias("h_system"),
-        F.col("ancestor").alias("h_anc"),
-        F.col("descendant").alias("h_desc"),
-    )
-    grown = (
-        clo.join(
-            hop,
-            (F.col("system") == F.col("h_system"))
-            & (F.col("descendant") == F.col("h_anc")),
-        )
-        .select("system", "ancestor", F.col("h_desc").alias("descendant"))
-        .unionByName(clo)
-        .distinct()
-    )
-    dump(spark, "concept_closure_round1", grown)
-    # the checkpointed closure itself, for the consumer-side shape
-    dump(spark, "concept_closure_final", concept_closure(e))
+    dump(spark, "concept_closure_final", concept_closure(concept_edges(cs)))
 
-    # --- allocate_crawl_budget, lazy form (full ranked-pass plan) ---
+    # --- allocate_crawl_budget (the ranked pass above its checkpoint) ---
     from parquet_on_fhir_spark.operators.frontier import allocate_crawl_budget
 
     demand = (
@@ -117,7 +73,7 @@ def main() -> None:
     dump(
         spark,
         "allocate_crawl_budget_lazy",
-        allocate_crawl_budget(demand, 60, eager_cleanup=False),
+        allocate_crawl_budget(demand, 60),
     )
 
 
