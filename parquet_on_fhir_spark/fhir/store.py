@@ -154,6 +154,11 @@ class FhirStore:
         Returns ``{"<rtype>": matches, "<IncludedType>": frame, ...}`` —
         multiple result frames is the natural Spark shape for a FHIR
         search bundle (one DataFrame per resourceType).
+
+        An ``_include`` without a target type returns a frame for EVERY
+        other table in the store: the resources of that type the matches
+        reference, an empty frame when they reference none. Every frame
+        is lazy, so ``search`` itself starts no Spark job.
         """
         plain: list[str] = []
         chained: list[tuple[str, str, str]] = []
@@ -222,13 +227,11 @@ class FhirStore:
                 if t not in self.tables or t == rtype:
                     continue
                 ids = _ref_ids(primary, el, t)
-                frame = self.tables[t].df.join(
+                out[t] = self.tables[t].df.join(
                     F.broadcast(ids),
                     F.col("id") == F.col("__ref_id"),
                     "left_semi",
                 )
-                if frame.take(1) or tgt:  # keep explicit targets even if empty
-                    out[t] = frame
 
         for other, el in revincludes:
             ids = primary.select(F.col("id").alias("__m_id")).distinct()

@@ -4551,6 +4551,20 @@ def _binom_fold_sql(m: str, j: str) -> str:
     )
 
 
+def _guard_cells(
+    cells: DataFrame, cols: list[str], too_big: Column, message: str
+) -> DataFrame:
+    """``cells`` with each of ``cols`` replaced by a guarded copy that
+    raises ``message`` when ``too_big`` holds: whatever reads a cell
+    first meets the guard first."""
+    return cells.withColumns(
+        {
+            c: F.when(too_big, F.raise_error(F.lit(message))).otherwise(F.col(c))
+            for c in cols
+        }
+    )
+
+
 def fisher_exact(
     df: DataFrame,
     exposure_col: str,
@@ -4600,6 +4614,17 @@ def fisher_exact(
             F.sum(F.when(~e & ~o, 1).otherwise(0)).alias("d"),
         )
     )
+    # The guard rides on every cell the k-grid reads, so it raises
+    # before the first binomial fold can overflow (ColumnPruning would
+    # drop a guard column nothing reads).
+    cells = _guard_cells(
+        cells,
+        ["a", "b", "c", "d"],
+        F.col("a") + F.col("b") + F.col("c") + F.col("d") > max_n,
+        f"fisher_exact: n > {max_n} exceeds the DECIMAL(38,0) "
+        "exact-binomial envelope — use chi2_crosstab / "
+        "proportions_ztest at this sample size",
+    )
     base = cells.select(
         "a",
         "b",
@@ -4635,16 +4660,6 @@ def fisher_exact(
         .withColumn("w_k", F.expr(w_of("k")))
         .drop("r1", "r2", "c1")
     )
-    guard = F.when(
-        F.col("n") > max_n,
-        F.raise_error(
-            F.lit(
-                f"fisher_exact: n > {max_n} exceeds the DECIMAL(38,0) "
-                "exact-binomial envelope — use chi2_crosstab / "
-                "proportions_ztest at this sample size"
-            )
-        ).cast("double"),
-    )
     out = grid.groupBy("a", "b", "c", "d", "n", "w_obs", "w_total").agg(
         F.sum(F.when(F.col("w_k") <= F.col("w_obs"), F.col("w_k"))).alias(
             "__num_two"
@@ -4664,7 +4679,7 @@ def fisher_exact(
         "b",
         "c",
         "d",
-        guard.otherwise(ratio(F.col("__num_two"))).alias("p_two_sided"),
+        ratio(F.col("__num_two")).alias("p_two_sided"),
         ratio(F.col("__num_ge")).alias("p_greater"),
         ratio(F.col("__num_le")).alias("p_less"),
         F.when(
@@ -4720,6 +4735,14 @@ def mcnemar_exact(
             F.sum(F.when(~pre & post, 1).otherwise(0)).alias("c"),
         )
     )
+    cells = _guard_cells(
+        cells,
+        ["b", "c"],
+        F.col("b") + F.col("c") > max_n,
+        f"mcnemar_exact: b + c > {max_n} exceeds the "
+        "DECIMAL(38,0) exact-binomial envelope — use the "
+        "chi-square form at this sample size",
+    )
     base = cells.withColumn("n", F.col("b") + F.col("c"))
     grid = base.select(
         "n_pairs",
@@ -4733,16 +4756,6 @@ def mcnemar_exact(
     out = grid.groupBy("n_pairs", "b", "c", "n").agg(
         F.sum("w_k").alias("__tail")
     )
-    guard = F.when(
-        F.col("n") > max_n,
-        F.raise_error(
-            F.lit(
-                f"mcnemar_exact: b + c > {max_n} exceeds the "
-                "DECIMAL(38,0) exact-binomial envelope — use the "
-                "chi-square form at this sample size"
-            )
-        ).cast("double"),
-    )
     two_pow_n = F.expr(
         "aggregate(CASE WHEN n > 0 THEN sequence(1L, n) "
         "ELSE CAST(array() AS array<bigint>) END, "
@@ -4753,11 +4766,9 @@ def mcnemar_exact(
         "n_pairs",
         "b",
         "c",
-        guard.otherwise(
-            F.when(F.col("n") == 0, F.lit(1.0)).otherwise(
-                F.round(F.least(F.lit(1.0), 2.0 * p_raw), 12)
-            )
-        ).alias("p_two_sided"),
+        F.when(F.col("n") == 0, F.lit(1.0))
+        .otherwise(F.round(F.least(F.lit(1.0), 2.0 * p_raw), 12))
+        .alias("p_two_sided"),
         F.when(
             F.col("c") > 0,
             F.round(F.col("b").cast("double") / F.col("c").cast("double"), 12),

@@ -6,6 +6,21 @@ AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), shuffle partitions sized to the parallelism at hand,
 UTC session time so results are byte-comparable across engines, and
 Arrow for any pandas exchange.
+
+py4j round trips: every classic ``Column`` method and ``F.col`` goes
+through ``pyspark.errors.utils._with_origin``, which (while
+``spark.python.sql.dataFrameDebugging.enabled`` is on, pyspark's
+default) looks up the active session, reads
+``spark.sql.stackTracesInDataFrameContext``, resolves
+``PySparkCurrentOrigin`` by reflection, walks the Python stack and sets
+then clears the origin — about 7 extra py4j round trips per Column
+call. Building ``to_fhir_json`` over a Patient schema takes ~2,950 round
+trips with it and ~840 without. The session turns it off. What is lost:
+Spark error messages no longer carry PySpark's "DataFrame query
+context" file:line lines; error classes and messages are unchanged.
+pyspark reads the flag once per process, at the first Column call made
+while a session is active, so it is set on ``SparkSession.builder`` —
+a later ``conf.set`` comes too late.
 """
 
 from __future__ import annotations
@@ -13,6 +28,7 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 # Catalyst extension jar (annotation-aware predicate rewrite, SURVEY
@@ -22,6 +38,19 @@ from pyspark.sql import SparkSession
 # session without the extension — never fatal.
 _EXT_JAR = Path(__file__).resolve().parent / "jvm" / "pofs-catalyst-ext.jar"
 _EXT_CLASS = "org.pofs.spark.FhirAnnotationExtensions"
+
+# The directory that holds the package. Python workers import the
+# package whenever a UDF or ``mapInPandas`` function refers to it, and
+# they do not inherit this process's ``sys.path``.
+_PKG_PARENT = str(Path(__file__).resolve().parent.parent)
+
+
+def _worker_pythonpath() -> str:
+    """``spark.executorEnv.PYTHONPATH`` with the package's parent
+    directory first, merged with any value already configured."""
+    existing = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
+    parts = [p for p in existing.split(os.pathsep) if p and p != _PKG_PARENT]
+    return os.pathsep.join([_PKG_PARENT, *parts])
 
 
 def get_session(app_name: str = "parquet-on-fhir-spark") -> SparkSession:
@@ -50,6 +79,10 @@ def get_session(app_name: str = "parquet-on-fhir-spark") -> SparkSession:
         # Arrow for pandas UDF / toPandas exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # No per-Column call-site capture (see the module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Workers import the package from any working directory.
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     if _EXT_JAR.exists() and os.environ.get("SPARK_GRAFT_NO_EXT") != "1":
         # extraClassPath (not spark.jars): pyspark forwards builder

@@ -1,4 +1,5 @@
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -21,3 +22,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs fn started)``,
+    counted with ``statusTracker`` under a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"job-pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

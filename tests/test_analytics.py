@@ -2404,10 +2404,12 @@ def test_fisher_exact_null_rows_excluded_and_envelope_guard(spark):
     got = fisher_exact(df, "e", "o").collect()[0]
     assert (got["a"], got["b"], got["c"], got["d"]) == (1, 0, 0, 1)
 
+    # n = 200: the k-grid's binomial fold would overflow DECIMAL(38,0),
+    # so the guard on the cells must raise first, with its own message
     big = spark.range(200).selectExpr(
         "id % 2 = 0 AS e", "id % 3 = 0 AS o"
     )
-    with pytest.raises(Exception, match="DECIMAL"):
+    with pytest.raises(Exception, match=r"fisher_exact: n > 120 exceeds"):
         fisher_exact(big, "e", "o").collect()
 
 
@@ -2459,8 +2461,9 @@ def test_mcnemar_exact_null_pairs_and_envelope(spark):
     got = mcnemar_exact(df, "pre", "post").collect()[0]
     assert got["n_pairs"] == 2 and (got["b"], got["c"]) == (1, 1)
 
+    # b + c = 150: the fold would overflow first without the cell guard
     big = spark.range(300).selectExpr("id % 2 = 0 AS pre", "id % 3 = 0 AS post")
-    with pytest.raises(Exception, match="DECIMAL"):
+    with pytest.raises(Exception, match=r"mcnemar_exact: b \+ c > 120 exceeds"):
         mcnemar_exact(big, "pre", "post").collect()
 
 

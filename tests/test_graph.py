@@ -1,7 +1,6 @@
 """Connected components + cluster dedup + chunking vs plain-Python references."""
 
 import random
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -203,21 +202,7 @@ def test_fixpoints_raise_the_same_way(spark, name):
         _TOO_FEW_ROUNDS[name](spark)
 
 
-def _count_jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it started (job group)."""
-    sc = spark.sparkContext
-    group = f"job-pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_closure_fixpoint_one_job_per_round(spark):
+def test_closure_fixpoint_one_job_per_round(spark, count_jobs):
     """Each doubling round is ONE job (lazy checkpoint + the witness
     count); AQE is off under the metadata guard, so counts repeat."""
     from parquet_on_fhir_spark.fhir.terminology import (
@@ -227,13 +212,13 @@ def test_closure_fixpoint_one_job_per_round(spark):
 
     chain = _closure_edges(spark, _chain(9))
     # 3 doubling rounds close paths of 8 edges; the 4th repeats the count
-    clo, jobs = _count_jobs(spark, lambda: concept_closure(chain))
+    clo, jobs = count_jobs(lambda: concept_closure(chain))
     assert jobs == 4 and clo.count() == 36
     old = concept_closure(_closure_edges(spark, [(0, 1)]))
     new = _closure_edges(spark, [(1, 2)])
     # the bridged seed {c1>c2, c0>c2} is already closed: round 1 doubles
     # it, round 2 repeats the count
-    delta, jobs = _count_jobs(spark, lambda: closure_delta(old, new))
+    delta, jobs = count_jobs(lambda: closure_delta(old, new))
     assert jobs == 2
     assert {(r.ancestor, r.descendant) for r in delta.collect()} == {
         ("c1", "c2"),

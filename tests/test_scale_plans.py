@@ -824,3 +824,28 @@ def test_extract_links_rides_the_scan(spark):
     p = plan_of(extract_links(pages))
     assert "Exchange" not in p, p
     assert "Join" not in p, p
+
+
+def test_observe_reports_empty_metrics_under_lazy_checkpoint(spark):
+    """``DataFrame.observe`` on a frame that ``localCheckpoint(eager=False)``
+    then cuts reports empty metrics (0 rows, NULL sums) and raises
+    nothing; without the cut, or with an eager one, the metrics are
+    right. So a lazily cut loop cannot take per-round metrics from
+    ``observe``."""
+    from pyspark.sql import Observation
+
+    def observed(cut):
+        obs = Observation()
+        df = spark.range(500).observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.sum("id").alias("mass")
+        )
+        assert cut(df).count() == 500
+        return obs.get
+
+    full = {"rows": 500, "mass": 124750}
+    assert observed(lambda df: df) == full
+    assert observed(lambda df: df.localCheckpoint(eager=True)) == full
+    assert observed(lambda df: df.localCheckpoint(eager=False)) == {
+        "rows": 0,
+        "mass": None,
+    }

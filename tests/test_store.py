@@ -180,3 +180,54 @@ def test_match_patients_links_perturbed_records(spark):
     }
     # c1: garci vs garcia = 1 (best), vs gracia = 3; p3 is blocked out
     assert got == {"c1": ("p1", 1)}
+
+
+def test_untyped_include_starts_no_job(spark, tmp_path, count_jobs):
+    """An ``_include`` without a target type returns a lazy frame for
+    every other table: exactly the referenced rows, an empty frame for
+    the type nothing references, and ``search`` itself starts no job."""
+    import json
+
+    from parquet_on_fhir_spark.fhir.encode import encode_ndjson, write_table
+
+    resources = {
+        "Patient": [
+            {"resourceType": "Patient", "id": f"p{i}", "gender": "female"}
+            for i in range(4)
+        ],
+        "Practitioner": [
+            {"resourceType": "Practitioner", "id": "dr1", "active": True}
+        ],
+        "Observation": [
+            {"resourceType": "Observation", "id": f"o{i}", "status": status,
+             "subject": {"reference": f"Patient/p{p}"}}
+            for i, (status, p) in enumerate(
+                [("final", 0), ("final", 2), ("final", 0), ("amended", 1),
+                 ("amended", 3)]
+            )
+        ],
+    }
+    for rtype, rows in resources.items():
+        src = tmp_path / "ndjson" / rtype
+        src.mkdir(parents=True)
+        (src / "part.ndjson").write_text(
+            "".join(json.dumps(r) + "\n" for r in rows)
+        )
+        write_table(
+            encode_ndjson(spark, str(src), resource_type=rtype),
+            str(tmp_path / "tables" / rtype),
+        )
+    store = FhirStore.read(spark, str(tmp_path / "tables"), list(resources))
+
+    out, jobs = count_jobs(
+        lambda: store.search(
+            "Observation", "status=final&_include=Observation:subject"
+        )
+    )
+    assert jobs == 0
+    ids = {t: sorted(r.id for r in df.select("id").collect()) for t, df in out.items()}
+    assert ids == {
+        "Observation": ["o0", "o1", "o2"],
+        "Patient": ["p0", "p2"],
+        "Practitioner": [],
+    }
