@@ -2,7 +2,6 @@
 bucketed joins are exchange-free, broadcasts happen, pushdown reaches
 the scan, salted joins match plain joins."""
 
-import tempfile
 
 import pytest
 
@@ -70,13 +69,13 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "l_extendedprice" not in read
 
 
-def test_foreach_batch_sink(spark, sf_dir):
+def test_foreach_batch_sink(spark, sf_dir, tmp_path):
     from parquet_on_fhir_spark.streaming.jobs import (
         run_foreach_batch_to_parquet,
         stream_events,
     )
 
-    out = tempfile.mkdtemp(prefix="pofs_fb_")
+    out = str(tmp_path)
     s = stream_events(spark, sf_dir).select("event_id", "event_type")
     run_foreach_batch_to_parquet(s, out)
     back = spark.read.parquet(f"{out}/batch=*")
@@ -111,12 +110,11 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
         spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
 
 
-def test_range_clustered_write_enables_file_skipping(spark, sf_dir):
+def test_range_clustered_write_enables_file_skipping(spark, sf_dir, tmp_path):
     """write_clustered produces near-disjoint per-file min-max ranges on
     the clustering column (checked in the parquet footers), so selective
     predicates skip whole files; an unclustered write overlaps heavily."""
     import glob
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -124,7 +122,7 @@ def test_range_clustered_write_enables_file_skipping(spark, sf_dir):
     from parquet_on_fhir_spark.operators.layout import write_clustered
 
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    base = tempfile.mkdtemp(prefix="layout_")
+    base = str(tmp_path)
     write_clustered(l, f"{base}/clustered", ["l_orderkey"], n_files=8)
     l.repartition(8).write.mode("overwrite").parquet(f"{base}/unclustered")
 
@@ -183,16 +181,14 @@ def test_token_budget_has_no_single_partition_window(spark, sf_dir):
     assert out.agg(F.sum("n_tokens")).collect()[0][0] <= int(total * 0.4)
 
 
-def test_compact_table(spark, sf_dir):
+def test_compact_table(spark, sf_dir, tmp_path):
     """Streaming-ingest residue (many small files) → few right-sized
     files; same rows; concurrent-reader-safe swap; idempotent re-run."""
-    import tempfile
     from pathlib import Path
 
     from parquet_on_fhir_spark.operators.layout import compact_table
 
-    base = tempfile.mkdtemp(prefix="compact_")
-    tbl = f"{base}/t"
+    tbl = str(tmp_path / "t")
     lineitem = load_table(spark, sf_dir, "lineitem")
     lineitem.repartition(64).write.parquet(tbl)  # simulate tiny appends
     before = len(list(Path(tbl).glob("part-*.parquet")))
@@ -211,13 +207,12 @@ def test_compact_table(spark, sf_dir):
     assert r2["skipped"]  # already compact — no rewrite job
 
 
-def test_zorder_write_tiles_both_columns(spark, sf_dir):
+def test_zorder_write_tiles_both_columns(spark, sf_dir, tmp_path):
     """write_zordered files cover rectangular Morton tiles: per-file
     spans on BOTH clustered columns are much narrower than the global
     span (single-column range clustering only narrows its own column),
     and the Z-key math matches a pure-Python interleave."""
     import glob
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -227,7 +222,7 @@ def test_zorder_write_tiles_both_columns(spark, sf_dir):
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
-    base = tempfile.mkdtemp(prefix="pofs_ztest_")
+    base = str(tmp_path / "z")
     write_zordered(l, base, "l_orderkey", "l_partkey", bits=21, n_files=16)
 
     def spans(col):

@@ -5,12 +5,11 @@ package from any working directory."""
 import os
 import subprocess
 import sys
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
-from pyspark.errors import utils as errors_utils
 
+from parquet_on_fhir_spark import profile
 from parquet_on_fhir_spark.fhir.annotations import annotate
 from parquet_on_fhir_spark.fhir.decode import to_fhir_json
 
@@ -26,34 +25,6 @@ PATIENT_DDL = (
     "postalCode: string, country: string>>, "
     "multipleBirthInteger bigint, multipleBirthBoolean boolean"
 )
-
-
-@contextmanager
-def _py4j_commands(spark):
-    """Record the py4j commands sent while the block runs, minus the
-    ``m`` memory-release commands, which follow Python's garbage
-    collector rather than the code under test.
-
-    pyspark reads ``spark.python.sql.dataFrameDebugging.enabled`` once
-    per process, at the first Column call, and latches it; the latch is
-    cleared here so the block sees the session's current value."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    sent: list[str] = []
-
-    def counting(command, *args, **kwargs):
-        if not command.startswith("m\n"):
-            sent.append(command)
-        return send(command, *args, **kwargs)
-
-    latched = errors_utils._enable_debugging_cache
-    errors_utils._enable_debugging_cache = None
-    client.send_command = counting
-    try:
-        yield sent
-    finally:
-        del client.send_command
-        errors_utils._enable_debugging_cache = latched
 
 
 def test_session_disables_dataframe_debugging(spark):
@@ -79,7 +50,7 @@ def test_expression_build_round_trips(spark, layer):
     else:
         annotated = annotate(df)
         build, bound = lambda: to_fhir_json(annotated, resource_type="Patient"), 1200
-    with _py4j_commands(spark) as sent:
+    with profile.py4j_commands(spark) as sent:
         build()
     assert len(sent) <= bound, len(sent)
 

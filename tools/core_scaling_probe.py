@@ -11,7 +11,9 @@ set of genuinely data-bound headline queries at the core count in
 
 The replicated directory is reused when it already exists (the probe
 times QUERIES, not the replication), so both core counts see identical
-bytes. Prints one JSON line: {"cpus": N, "k": K, "queries": {...}}.
+bytes. Prints one JSON line: {"cpus": N, "k": K, "queries": {...}},
+with each query's ``profile.profile_query`` record (3 reps after a
+warm call).
 """
 
 from __future__ import annotations
@@ -24,8 +26,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from parquet_on_fhir_spark.profile import profile_query  # noqa: E402
 from parquet_on_fhir_spark.session import get_session  # noqa: E402
-from parquet_on_fhir_spark.suite import all_queries  # noqa: E402
 from tools.scale_probe import replicate  # noqa: E402
 
 #: data-bound headline queries whose heavy stages can actually spread
@@ -79,22 +81,9 @@ def main() -> None:
     calib = round(time.perf_counter() - t0, 3)
     print(f"# pure-cpu calibration (64 tasks x 3M hash ops): {calib}s",
           file=sys.stderr)
-    specs = {q.name: q for q in all_queries()}
-    results: dict[str, float] = {"__pure_cpu_calibration": calib}
+    results: dict = {"__pure_cpu_calibration": calib}
     for name in PROBE:
-        fn = specs[name].fn
-        spark.sparkContext.setJobDescription(f"core-probe warm {name}")
-        fn(spark, out_dir).count()  # warm (plan/code caches)
-        reps = []
-        for i in range(3):
-            spark.sparkContext.setJobDescription(f"core-probe {name} rep{i}")
-            t0 = time.perf_counter()
-            fn(spark, out_dir).count()
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        results[name] = round(reps[1], 3)  # median of 3
-        print(f"# {name}: {results[name]}s {[round(r, 2) for r in reps]}",
-              file=sys.stderr)
+        results[name] = profile_query(spark, name, out_dir, reps=3)
     print(json.dumps({
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
         "k": k,

@@ -18,17 +18,15 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from parquet_on_fhir_spark.operators.bucketing import plan_of  # noqa: E402
 from parquet_on_fhir_spark.session import get_session  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 OUT = Path(__file__).resolve().parent.parent / "plans" / "r16"
 
 
-def dump(spark, name: str, df) -> None:
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    s = df._jdf.queryExecution().explainString(mode)
+def dump(name: str, df) -> None:
+    s = plan_of(df)
     (OUT / f"{name}_interior.txt").write_text(s)
     print(name, "->", len(s.splitlines()), "lines")
 
@@ -46,7 +44,7 @@ def main() -> None:
     # --- pagerank, five lazy rounds (no per-round checkpoint) ---
     from parquet_on_fhir_spark.operators.graph import pagerank
 
-    dump(spark, "pagerank_5rounds_lazy", pagerank(edges, iterations=5))
+    dump("pagerank_5rounds_lazy", pagerank(edges, iterations=5))
 
     # --- concept_closure (the qf23/qf40 closure) ---
     from parquet_on_fhir_spark.fhir.terminology import (
@@ -59,7 +57,7 @@ def main() -> None:
     )
 
     cs = _encode_doc(spark, _CS_ANATOMY_PROPS_DOC, "CodeSystem")
-    dump(spark, "concept_closure_final", concept_closure(concept_edges(cs)))
+    dump("concept_closure_final", concept_closure(concept_edges(cs)))
 
     # --- allocate_crawl_budget (the ranked pass above its checkpoint) ---
     from parquet_on_fhir_spark.operators.frontier import allocate_crawl_budget
@@ -70,11 +68,7 @@ def main() -> None:
         .groupBy("host")
         .agg(F.count("*").alias("n_urls"))
     )
-    dump(
-        spark,
-        "allocate_crawl_budget_lazy",
-        allocate_crawl_budget(demand, 60),
-    )
+    dump("allocate_crawl_budget_lazy", allocate_crawl_budget(demand, 60))
 
 
 if __name__ == "__main__":

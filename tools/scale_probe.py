@@ -10,6 +10,7 @@ Usage: python tools/scale_probe.py [k]
 from __future__ import annotations
 
 import json
+import shutil
 import sys
 import tempfile
 import time
@@ -20,8 +21,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F
 
 from parquet_on_fhir_spark.api import load_table
+from parquet_on_fhir_spark.profile import profile_query
 from parquet_on_fhir_spark.session import get_session
-from parquet_on_fhir_spark.suite import all_queries
 
 PROBE_QUERIES = [
     # anchors (probed every wave for run-to-run comparability)
@@ -97,14 +98,12 @@ def replicate(spark, sf_dir: str, out: str, k: int) -> None:
 
 
 def time_queries(spark, sf_dir: str) -> dict[str, float]:
-    specs = {q.name: q for q in all_queries()}
-    for name in PROBE_QUERIES:  # warm
-        specs[name].fn(spark, sf_dir).count()
+    """Seconds of one ``fn(spark, sf_dir).count()`` per probe query,
+    after a warm call (``profile.profile_query``)."""
     out = {}
     for name in PROBE_QUERIES:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, sf_dir).count()
-        out[name] = round(time.perf_counter() - t0, 3)
+        rec = profile_query(spark, name, sf_dir, reps=1)
+        out[name] = round(rec["build_s"][0] + rec["action_s"][0], 3)
     return out
 
 
@@ -139,25 +138,28 @@ def main() -> None:
     spark = get_session("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     scaled_dir = tempfile.mkdtemp(prefix=f"pofs_scale{k}_")
-    t0 = time.perf_counter()
-    replicate(spark, base_dir, scaled_dir, k)
-    gen_s = round(time.perf_counter() - t0, 1)
+    try:
+        t0 = time.perf_counter()
+        replicate(spark, base_dir, scaled_dir, k)
+        gen_s = round(time.perf_counter() - t0, 1)
 
-    base = time_queries(spark, base_dir)
-    big = time_queries(spark, scaled_dir)
-    report = {
-        "k": k,
-        "generate_seconds": gen_s,
-        "base_seconds": base,
-        "scaled_seconds": big,
-        "ratio": {q: round(big[q] / max(base[q], 1e-3), 2) for q in base},
-    }
-    # the All-Pairs candidate census is its own (expensive) experiment —
-    # measured through wave 8 and now guarded in-operator
-    # (operators/joins.py::_set_similarity_guard); opt in explicitly
-    if "--allpairs" in sys.argv:
-        report["allpairs_base"] = allpairs_candidates(spark, base_dir)
-        report["allpairs_scaled"] = allpairs_candidates(spark, scaled_dir)
+        base = time_queries(spark, base_dir)
+        big = time_queries(spark, scaled_dir)
+        report = {
+            "k": k,
+            "generate_seconds": gen_s,
+            "base_seconds": base,
+            "scaled_seconds": big,
+            "ratio": {q: round(big[q] / max(base[q], 1e-3), 2) for q in base},
+        }
+        # the All-Pairs candidate census is its own (expensive) experiment —
+        # measured through wave 8 and now guarded in-operator
+        # (operators/joins.py::_set_similarity_guard); opt in explicitly
+        if "--allpairs" in sys.argv:
+            report["allpairs_base"] = allpairs_candidates(spark, base_dir)
+            report["allpairs_scaled"] = allpairs_candidates(spark, scaled_dir)
+    finally:
+        shutil.rmtree(scaled_dir, ignore_errors=True)
     print(json.dumps(report, indent=2))
 
 
