@@ -543,16 +543,18 @@ def near_dup_clusters(
 ) -> DataFrame:
     """Full near-dedup: MinHash → LSH pairs → transitive clusters →
     deterministic survivor per cluster.  ``max_iter`` bounds the
-    connected-components rounds (raises rather than under-merging —
-    see operators/graph.py; 25 covers any realistic cluster diameter).
+    distributed connected-components rounds (raises rather than
+    under-merging — see operators/graph.py; 25 covers any realistic
+    cluster diameter).
 
     Pairs alone under-delete (a~b and b~c must collapse to ONE survivor
     even when a~c was never emitted), so the pair graph is closed with
     :func:`~parquet_on_fhir_spark.operators.graph.connected_components`
-    — a distributed O(log n)-round fixpoint, never a driver-side pass
-    over the edges.  Output: every input id with its cluster id (the
-    minimum doc id of the cluster; singletons are their own cluster)
-    and ``is_survivor`` (true for the cluster minimum — the row exact/
+    — union-find on the driver for a pair graph of at most
+    ``graph._BROADCAST_MAX_ROWS`` edges, a distributed fixpoint above
+    that.  Output: every input id with its cluster id (the minimum doc
+    id of the cluster; singletons are their own cluster) and
+    ``is_survivor`` (true for the cluster minimum — the row exact/
     near dedup would keep).
     """
     from parquet_on_fhir_spark.operators import graph as _graph
@@ -567,8 +569,8 @@ def near_dup_clusters(
     # The label table covers only docs that appear in a near-dup pair.
     # Its checkpointed plan carries no stats, so the left join back to
     # the full corpus would default to a sort-merge join — shuffling
-    # and sorting the CORPUS id column on both sides. When the
-    # fixpoint's own convergence witness says the label table is small
+    # and sorting the CORPUS id column on both sides. When the row
+    # count _components already holds says the label table is small
     # (≤1M rows ≈ tens of MB), broadcast it and leave the corpus side
     # completely unshuffled (r16, guide §3.1); bigger label tables
     # keep the shuffle join — a 100 TB pair graph must not broadcast.

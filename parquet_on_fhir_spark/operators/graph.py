@@ -1,14 +1,16 @@
-"""Distributed connected components over an edge list.
+"""Connected components over an edge list, and other graph operators.
 
 The missing piece after any LSH near-dup pass: MinHash/SimHash emit
 *pairs*, but dedup must keep one survivor per transitive *cluster*
-(a~b, b~c => drop two of {a,b,c}).  At 100 TB the pair graph does not
-fit on the driver, so the clustering itself has to be a distributed
-fixpoint.
+(a~b, b~c => drop two of {a,b,c}).  A pair graph of at most
+``_BROADCAST_MAX_ROWS`` edges is collected once and labelled by
+union-find on the driver — q108's 142-node graph in one job instead of
+two fixpoint rounds of six.  At 100 TB the pair graph does not fit on
+the driver, so bigger graphs cluster in a distributed fixpoint.
 
-Algorithm: min-label propagation with pointer jumping — what GraphX's
-``connectedComponents`` (Pregel) runs, expressed as DataFrame joins.
-Each round:
+Algorithm of the distributed path: min-label propagation with pointer
+jumping — what GraphX's ``connectedComponents`` (Pregel) runs,
+expressed as DataFrame joins. Each round:
 
 1. propagate: ``label(v) <- min(label(v), min over neighbours u of
    label(u))`` — one edge-to-label join plus a groupBy-min, both
@@ -45,6 +47,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, NumericType, StructField, StructType
 
 _log = logging.getLogger(__name__)
 
@@ -97,9 +100,15 @@ def fixpoint(
 _PTR_JUMP_START = 3
 _PTR_JUMPS = 2
 
-#: node/edge count under which the r16 small-graph strategies engage
+#: node/edge count under which the small-graph strategies engage
 #: (broadcast rank/contribution tables in pagerank, adjacency-
-#: intersection triangle counting): tens of MB of broadcast at most.
+#: intersection triangle counting, driver-side union-find in
+#: connected_components): tens of MB of broadcast or driver memory at
+#: most. For connected components the driver path wins at every size up
+#: to the gate: on random graphs (as many nodes as edges) at local[4] on
+#: 4 vCPUs it took 0.5-0.6 s / 1.2-1.5 s / 9-15 s for 10k / 100k / 1M
+#: edges against 15-17 s / 18-22 s / 123-164 s for the fixpoint, with
+#: the Python driver peaking at about 0.5 GB at 1M.
 #: Module constant so tests can force the big-graph branches on small
 #: fixtures and assert both strategies agree.
 _BROADCAST_MAX_ROWS = 1_000_000
@@ -113,14 +122,18 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the smallest node id reachable from the node.
-    Node ids must be an orderable numeric/string type.  Nodes with no
-    edges are the caller's to union in (their component is themselves).
+    Node ids must be numeric: a ``TypeError`` names any other id column
+    before a job starts.  A NULL endpoint is a node labelled NULL that
+    joins no component.  Nodes with no edges are the caller's to union
+    in (their component is themselves).
 
-    Raises ``RuntimeError`` if the labelling has not reached its
-    fixpoint within ``max_iter`` rounds (rounds scale with component
+    Graphs of at most ``_BROADCAST_MAX_ROWS`` edges are labelled on the
+    driver (see :func:`_components`); bigger ones run the distributed
+    fixpoint, which raises ``RuntimeError`` if the labelling has not
+    converged within ``max_iter`` rounds (rounds scale with component
     diameter — see module docstring); a partially-propagated result
     would silently under-merge clusters, which for dedup means silently
-    under-deleting.
+    under-deleting.  ``max_iter`` applies only to that path.
     """
     return _components(edges, src, dst, max_iter)[0]
 
@@ -129,22 +142,28 @@ def _components(
     edges: DataFrame, src: str, dst: str, max_iter: int
 ) -> tuple[DataFrame, int]:
     """:func:`connected_components` plus its row count, which the
-    convergence witness already paid for — consumers size a broadcast
+    label computation already paid for — consumers size a broadcast
     join by it without a fresh count action (guide §3.1: checkpointed
     frames have no stats, so AQE would plan a sort-merge join)."""
-    # Materialize the (possibly expensive — LSH pipelines) edge input
-    # ONCE; both the node set and the bidirectional edge table derive
-    # from the checkpoint, so neither branch replays the upstream plan.
-    # EAGER is deliberate (r16 A/B: lazy measured 3.47 s vs 2.78 s on
-    # q108): under a lazy checkpoint the first round's witness job
-    # materializes nodes and bidir as CONCURRENT AQE stages, each
-    # replaying the un-checkpointed upstream (the LSH pair pipeline)
-    # before any shared cache exists — the eager job computes it once.
     ends = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ends = ends.localCheckpoint()
+    for col, field in zip((src, dst), ends.schema.fields):
+        if not isinstance(field.dataType, NumericType):
+            raise TypeError(
+                f"connected_components: node id column {col!r} is "
+                f"{field.dataType.simpleString()}, not numeric"
+            )
+    # Materialize the (possibly expensive — LSH pipelines) edge input
+    # ONCE, with its count in the same job: both paths below read the
+    # checkpoint, so neither replays the upstream plan (a lazy cut
+    # WITHOUT this count let the first round's witness job replay it in
+    # concurrent AQE stages — r16 A/B on q108: 3.47 s vs 2.78 s).
+    ends = ends.localCheckpoint(eager=False)
+    n_edges = ends.count()
     # Node set from ALL endpoints (a self-loop-only node is still a node);
     # self-loops are then useless for propagation and dropped.
     nodes = ends.select("u").unionAll(ends.select(F.col("v").alias("u"))).distinct()
+    if n_edges <= _BROADCAST_MAX_ROWS:
+        return _driver_components(ends, nodes.schema["u"].dataType, n_edges)
     bidir = ends.filter(F.col("u") != F.col("v"))
     bidir = bidir.unionAll(bidir.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
@@ -188,6 +207,48 @@ def _components(
         "connected_components",
     )
     return labels.select("node", F.col("comp").alias("component")), rows
+
+
+def _driver_components(
+    ends: DataFrame, id_type: DataType, n_edges: int
+) -> tuple[DataFrame, int]:
+    """Label a small edge list with union-find on the driver: one
+    ``collect()`` instead of a fixpoint of ~6 jobs per round (q108's
+    142-node pair graph: 18 construction jobs -> 8). Every root is its
+    component's smallest id, so the labels equal the fixpoint's. The
+    frame is built from a pyarrow Table: a Python-list frame is a
+    pickled RDD that Spark must unpickle in Python workers."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in ends.collect():
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        if u is not None and v is not None:
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+    _log.debug(
+        "connected_components on the driver: edges=%d nodes=%d",
+        n_edges,
+        len(parent),
+    )
+    node = list(parent)
+    comp = [find(n) for n in node]  # NULL is its own root
+    schema = StructType(
+        [StructField("node", id_type), StructField("component", id_type)]
+    )
+    table = pa.table({"node": node, "component": comp})
+    return ends.sparkSession.createDataFrame(table, schema), len(node)
 
 
 def _canonical(e: DataFrame) -> DataFrame:

@@ -44,8 +44,8 @@ ann = (
     df.withColumn("__birthDate_start", fhir_date_start(F.col("birthDate")))
     .withColumn("__birthDate_end", fhir_date_end(F.col("birthDate")))
 )
-import tempfile
-path = tempfile.mkdtemp(prefix="pofs_ext_") + "/p.parquet"
+base = sys.argv[1]
+path = base + "/p.parquet"
 ann.write.mode("overwrite").parquet(path)
 spark.read.parquet(path).createOrReplaceTempView("p")
 df.createOrReplaceTempView("raw")
@@ -96,7 +96,7 @@ ndf = spark.createDataFrame(
 nann = ndf.withColumn(
     "__riskScore_numeric", F.col("riskScore").try_cast("decimal(38,6)")
 )
-npath = tempfile.mkdtemp(prefix="pofs_ext_") + "/n.parquet"
+npath = base + "/n.parquet"
 nann.write.mode("overwrite").parquet(npath)
 spark.read.parquet(npath).createOrReplaceTempView("pn")
 ndf.createOrReplaceTempView("rawn")
@@ -146,7 +146,7 @@ rann = (
     rdf.withColumn("__d_start", fhir_date_start(F.col("d")))
     .withColumn("__d_end", fhir_date_end(F.col("d")))
 )
-rpath = tempfile.mkdtemp(prefix="pofs_ext_") + "/r.parquet"
+rpath = base + "/r.parquet"
 rann.write.mode("overwrite").parquet(rpath)
 spark.read.parquet(rpath).createOrReplaceTempView("pr")
 rdf.createOrReplaceTempView("rawr")
@@ -173,9 +173,9 @@ print("CATALYST_EXT_OK")
 
 
 @pytest.mark.slow
-def test_injected_rule_pushdown_and_semantics():
+def test_injected_rule_pushdown_and_semantics(tmp_path):
     r = subprocess.run(
-        [sys.executable, "-c", SCENARIO],
+        [sys.executable, "-c", SCENARIO, str(tmp_path)],
         capture_output=True,
         text=True,
         timeout=420,

@@ -4,7 +4,6 @@ import pytest
 import json
 import subprocess
 import sys
-import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -21,8 +20,8 @@ def run_cli(*args):
 
 
 @pytest.mark.slow
-def test_cli_encode_validate_decode_roundtrip():
-    d = tempfile.mkdtemp(prefix="cli_")
+def test_cli_encode_validate_decode_roundtrip(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("cli"))
     rows = [
         {"resourceType": "Patient", "id": "p1", "birthDate": "1970-01", "gender": "male"},
         {"resourceType": "Patient", "id": "p2",
@@ -51,8 +50,8 @@ def test_cli_encode_validate_decode_roundtrip():
 
 
 @pytest.mark.slow
-def test_cli_view():
-    d = tempfile.mkdtemp(prefix="cli_view_")
+def test_cli_view(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("cli_view"))
     rows = [
         {"resourceType": "Patient", "id": "p1", "gender": "male",
          "name": [{"family": "A", "given": ["x"]}, {"family": "B"}]},
@@ -275,10 +274,10 @@ def test_cli_lookup_and_closure_delta(tmp_path, capsys):
 
 
 @pytest.mark.slow
-def test_cli_expand_operation_flags():
+def test_cli_expand_operation_flags(tmp_path_factory):
     """r12 wave 2: the expand subcommand exposes the $expand operation
     parameters (paging/filter/displayLanguage) and --versioned."""
-    d = tempfile.mkdtemp(prefix="cli_exp_")
+    d = str(tmp_path_factory.mktemp("cli_exp"))
     cs = [{
         "resourceType": "CodeSystem", "id": "c", "status": "active",
         "content": "complete", "url": "http://x/cs", "version": "2.0",

@@ -1,7 +1,6 @@
 """Mixed-resource splitting and corrupt-record quarantine."""
 
 import json
-import tempfile
 
 from parquet_on_fhir_spark.fhir.encode import (
     encode_mixed_ndjson,
@@ -9,8 +8,8 @@ from parquet_on_fhir_spark.fhir.encode import (
 )
 
 
-def test_mixed_resource_split(spark):
-    d = tempfile.mkdtemp(prefix="mixed_")
+def test_mixed_resource_split(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("mixed"))
     rows = [
         {"resourceType": "Patient", "id": "p1", "gender": "male"},
         {"resourceType": "Observation", "id": "o1", "status": "final"},
@@ -21,7 +20,7 @@ def test_mixed_resource_split(spark):
     with open(f"{d}/mixed.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
-    out = tempfile.mkdtemp(prefix="mixed_out_")
+    out = str(tmp_path_factory.mktemp("mixed_out"))
     counts = encode_mixed_ndjson(spark, f"{d}/mixed.ndjson", out)
     assert counts == {"Patient": 2, "Observation": 3}
 
@@ -34,8 +33,8 @@ def test_mixed_resource_split(spark):
     assert "__birthDate_start" in pat.columns
 
 
-def test_corrupt_record_quarantine(spark):
-    d = tempfile.mkdtemp(prefix="corrupt_")
+def test_corrupt_record_quarantine(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("corrupt"))
     with open(f"{d}/data.ndjson", "w") as f:
         f.write('{"resourceType":"Patient","id":"p1"}\n')
         f.write('THIS IS NOT JSON AT ALL {{{\n')
@@ -46,15 +45,15 @@ def test_corrupt_record_quarantine(spark):
     assert len(bad_rows) == 1 and bad_rows[0].startswith("THIS IS NOT JSON")
 
 
-def test_mixed_resource_split_uri_path(spark):
+def test_mixed_resource_split_uri_path(spark, tmp_path_factory):
     """Partition discovery must go through Spark/Hadoop FS semantics, not
     local-filesystem globbing — a file: URI root (shaped like any object
     store URI) must work end-to-end."""
-    d = tempfile.mkdtemp(prefix="mixed_uri_")
+    d = str(tmp_path_factory.mktemp("mixed_uri"))
     with open(f"{d}/mixed.ndjson", "w") as f:
         f.write('{"resourceType":"Patient","id":"p1"}\n')
         f.write('{"resourceType":"Observation","id":"o1","status":"final"}\n')
-    out = tempfile.mkdtemp(prefix="mixed_uri_out_")
+    out = str(tmp_path_factory.mktemp("mixed_uri_out"))
     counts = encode_mixed_ndjson(spark, f"file://{d}/mixed.ndjson", f"file://{out}")
     assert counts == {"Patient": 1, "Observation": 1}
     assert spark.read.parquet(f"{out}/Patient").count() == 1

@@ -3,7 +3,6 @@ own example pairs (SURVEY.md §5: /root/reference/README.md:88-297,
 385-719) and the golden example parquet files."""
 
 import json
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,37 +24,37 @@ PATIENT = "/root/reference/examples/Patient.parquet"
 OBSERVATION = "/root/reference/examples/ExplanationOfBenefit.parquet"
 
 
-def _write_ndjson(rows):
-    d = tempfile.mkdtemp(prefix="fhir_test_")
+def _write_ndjson(tmp_path_factory, rows):
+    d = str(tmp_path_factory.mktemp("fhir_test"))
     with open(f"{d}/data.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
     return d
 
 
-def _roundtrip(spark, rows, **kw):
-    path = _write_ndjson(rows)
+def _roundtrip(tmp_path_factory, spark, rows, **kw):
+    path = _write_ndjson(tmp_path_factory, rows)
     df = encode_ndjson(spark, path, **kw)
     back = [json.loads(r.json) for r in to_fhir_json(df).collect()]
     return df, sorted(back, key=lambda x: x.get("id", ""))
 
 
 # --- spec README.md:88-106 — minimal sparse Patient -------------------------------
-def test_minimal_patient_schema_and_roundtrip(spark):
+def test_minimal_patient_schema_and_roundtrip(spark, tmp_path_factory):
     rows = [{"resourceType": "Patient", "id": "p1", "gender": "male"}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     # sparse derivation: only observed fields (README.md:15-18)
     assert set(df.columns) == {"resourceType", "id", "gender"}
     assert back == rows
 
 
 # --- README.md:110-137 — repeating element → LIST ----------------------------------
-def test_repeating_element(spark):
+def test_repeating_element(spark, tmp_path_factory):
     rows = [
         {"resourceType": "Patient", "id": "p1",
          "name": [{"family": "A", "given": ["x", "y"]}, {"family": "B"}]},
     ]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     f = df.schema["name"]
     assert isinstance(f.dataType, T.ArrayType)
     assert isinstance(f.dataType.elementType, T.StructType)
@@ -63,12 +62,12 @@ def test_repeating_element(spark):
 
 
 # --- README.md:139-172 — choice type: one sibling field per concrete type ------------
-def test_choice_type_expansion_and_exclusivity(spark):
+def test_choice_type_expansion_and_exclusivity(spark, tmp_path_factory):
     rows = [
         {"resourceType": "Patient", "id": "p1", "multipleBirthBoolean": False},
         {"resourceType": "Patient", "id": "p2", "multipleBirthInteger": 3},
     ]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     assert isinstance(df.schema["multipleBirthBoolean"].dataType, T.BooleanType)
     # integer → INT32 (README.md:74-76)
     assert isinstance(df.schema["multipleBirthInteger"].dataType, T.IntegerType)
@@ -76,24 +75,24 @@ def test_choice_type_expansion_and_exclusivity(spark):
 
     bad = [{"resourceType": "Patient", "id": "p1",
             "multipleBirthBoolean": True, "multipleBirthInteger": 2}]
-    path = _write_ndjson(bad)
+    path = _write_ndjson(tmp_path_factory, bad)
     with pytest.raises(FhirValidationError, match="choice group"):
         encode_ndjson(spark, path, resource_type="Patient")
 
 
 # --- README.md:174-200 — complex element → named group ---------------------------------
-def test_complex_element(spark):
+def test_complex_element(spark, tmp_path_factory):
     rows = [{"resourceType": "Patient", "id": "p1",
              "maritalStatus": {"coding": [{"code": "M", "system": "http://x"}],
                                "text": "Married"}}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     ms = df.schema["maritalStatus"].dataType
     assert isinstance(ms, T.StructType) and "coding" in ms.fieldNames()
     assert back == rows
 
 
 # --- README.md:202-248 — extensions (recursive, choice values) --------------------------
-def test_extensions_recursive(spark):
+def test_extensions_recursive(spark, tmp_path_factory):
     rows = [{"resourceType": "Patient", "id": "p1",
              "extension": [
                  {"url": "http://x/race",
@@ -101,7 +100,7 @@ def test_extensions_recursive(spark):
                                  "valueCoding": {"code": "2106-3", "display": "White"}}]},
                  {"url": "http://x/qaly", "valueDecimal": 1.25},
              ]}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     ext = df.schema["extension"].dataType.elementType
     assert "extension" in ext.fieldNames()  # depth-2 recursion observed
     # lossless decimal keeps string storage + numeric annotation (README.md:343-363)
@@ -111,24 +110,24 @@ def test_extensions_recursive(spark):
 
 
 # --- README.md:250-297 — primitive extension sibling ``_field`` ---------------------------
-def test_primitive_extension(spark):
+def test_primitive_extension(spark, tmp_path_factory):
     rows = [{"resourceType": "Patient", "id": "p1", "birthDate": "1970-01-01",
              "_birthDate": {"id": "pd1",
                             "extension": [{"url": "http://x/t",
                                            "valueDateTime": "1970-01-01T00:00:00Z"}]}}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     assert isinstance(df.schema["_birthDate"].dataType, T.StructType)
     assert back == rows
 
 
 # --- README.md:314-341 — date-range annotations -------------------------------------------
-def test_date_annotations_partial_dates(spark):
+def test_date_annotations_partial_dates(spark, tmp_path_factory):
     rows = [
         {"resourceType": "Patient", "id": "p1", "birthDate": "1968"},
         {"resourceType": "Patient", "id": "p2", "birthDate": "1968-10"},
         {"resourceType": "Patient", "id": "p3", "birthDate": "1968-10-11"},
     ]
-    path = _write_ndjson(rows)
+    path = _write_ndjson(tmp_path_factory, rows)
     df = encode_ndjson(spark, path, resource_type="Patient")
     got = {
         r.id: (str(r["__birthDate_start"]), str(r["__birthDate_end"]))
@@ -155,11 +154,11 @@ def test_date_annotation_spec_anchor(spark):
 
 
 # --- README.md:365-381 — quantity canonicalization (Cel → K example) -------------------------
-def test_quantity_canonical(spark):
+def test_quantity_canonical(spark, tmp_path_factory):
     rows = [{"resourceType": "Observation", "id": "o1",
              "valueQuantity": {"value": 37.0, "unit": "C", "code": "Cel",
                                "system": "http://unitsofmeasure.org"}}]
-    path = _write_ndjson(rows)
+    path = _write_ndjson(tmp_path_factory, rows)
     df = encode_ndjson(spark, path, resource_type="Observation")
     r = df.select("__valueQuantity_canonical").collect()[0][0]
     assert r["code"] == "K"
@@ -210,7 +209,7 @@ def test_quantity_canonical_clinical_units(spark):
 
 
 # --- README.md:20-22 — schema merge ------------------------------------------------------------
-def test_schema_merge_and_union(spark):
+def test_schema_merge_and_union(spark, tmp_path_factory):
     a = spark.createDataFrame(
         [("Patient", "p1", "male")], "resourceType string, id string, gender string"
     )
@@ -221,7 +220,7 @@ def test_schema_merge_and_union(spark):
     assert set(u.columns) == {"resourceType", "id", "gender", "birthDate"}
     assert u.count() == 2
 
-    base = tempfile.mkdtemp(prefix="fhir_merge_")
+    base = str(tmp_path_factory.mktemp("fhir_merge"))
     a.write.parquet(f"{base}/a")
     b.write.parquet(f"{base}/b")
     m = merge_tables(spark, f"{base}/a", f"{base}/b")
@@ -268,9 +267,9 @@ def test_reference_examples_decode(spark):
 @pytest.mark.parametrize(
     "name", ["Patient", "Observation", "ExplanationOfBenefit"]
 )
-def test_reference_examples_reencode_roundtrip(spark, name):
+def test_reference_examples_reencode_roundtrip(spark, tmp_path_factory, name):
     p = spark.read.parquet(f"/root/reference/examples/{name}.parquet")
-    ndjson_dir = tempfile.mkdtemp(prefix="fhir_rt_")
+    ndjson_dir = str(tmp_path_factory.mktemp("fhir_rt"))
     to_fhir_json(p).write.mode("overwrite").text(ndjson_dir)
     back = encode_ndjson(spark, ndjson_dir, resource_type=name)
     docs1 = sorted(
@@ -302,10 +301,10 @@ def test_reference_observation_numeric_annotation_matches(spark):
 
 
 # --- ADVICE r1 (high): Quantity.value is THE decimal site (README.md:343+) ---------------
-def test_quantity_value_lossless_lexical(spark):
+def test_quantity_value_lossless_lexical(spark, tmp_path_factory):
     """valueQuantity.value must store as lossless STRING and regenerate
     as a JSON number with its lexical text (trailing zero, >15 digits)."""
-    path = _write_ndjson([])  # dir only; write raw lines with exact lexical forms
+    path = _write_ndjson(tmp_path_factory, [])  # dir only; write raw lines with exact lexical forms
     with open(f"{path}/data.ndjson", "w") as f:
         f.write('{"resourceType":"Observation","id":"o1",'
                 '"valueQuantity":{"value":37.10,"unit":"C","code":"Cel"}}\n')
@@ -329,24 +328,24 @@ def test_quantity_value_lossless_lexical(spark):
 
 
 # --- adversarial: a numeric-looking STRING sharing a decimal site's name stays quoted ------
-def test_identifier_value_stays_quoted(spark):
+def test_identifier_value_stays_quoted(spark, tmp_path_factory):
     """Identifier.value ('value' WITHOUT unit/code sibling) is a string;
     a numeric-looking one must NOT be unquoted — the structural marking
     (not name-global regex) guarantees it."""
     rows = [{"resourceType": "Patient", "id": "p1",
              "identifier": [{"system": "http://x/mrn", "value": "0042"}],
              "extension": [{"url": "http://x/score", "valueDecimal": 13.5}]}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     assert back == rows  # 0042 still a string, valueDecimal a number
     j = to_fhir_json(df).collect()[0].json
     assert '"value":"0042"' in j and '"valueDecimal":13.5' in j
 
 
-def test_money_value_decimal(spark):
+def test_money_value_decimal(spark, tmp_path_factory):
     """Money shape (value + currency) is decimal-kinded too."""
     rows = [{"resourceType": "Claim", "id": "c1",
              "total": {"value": 99.90, "currency": "USD"}}]
-    path = _write_ndjson(rows)
+    path = _write_ndjson(tmp_path_factory, rows)
     with open(f"{path}/data.ndjson", "w") as f:
         f.write('{"resourceType":"Claim","id":"c1",'
                 '"total":{"value":99.90,"currency":"USD"}}\n')
@@ -357,7 +356,7 @@ def test_money_value_decimal(spark):
 
 
 # --- ADVICE r1 (medium): interior null placeholders in paired primitive arrays -------------
-def test_paired_primitive_array_null_placeholders(spark):
+def test_paired_primitive_array_null_placeholders(spark, tmp_path_factory):
     """"given":["Jim",null] / "_given":[null,{...}] must keep interior
     nulls (index alignment, README.md:250-297) through decode."""
     rows = [{"resourceType": "Patient", "id": "p1",
@@ -365,23 +364,23 @@ def test_paired_primitive_array_null_placeholders(spark):
                        "given": ["Jim", None],
                        "_given": [None, {"extension": [
                            {"url": "http://x/nick", "valueCode": "middle"}]}]}]}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     assert back == rows
     # unpaired arrays still null-prune (sparse regeneration)
     rows2 = [{"resourceType": "Patient", "id": "p1",
               "name": [{"family": "X", "given": ["Jim", None]}]}]
-    _, back2 = _roundtrip(spark, rows2, resource_type="Patient")
+    _, back2 = _roundtrip(tmp_path_factory, spark, rows2, resource_type="Patient")
     assert back2 == [{"resourceType": "Patient", "id": "p1",
                       "name": [{"family": "X", "given": ["Jim"]}]}]
 
 
-def test_paired_array_value_only_null(spark):
+def test_paired_array_value_only_null(spark, tmp_path_factory):
     """"given":[null] with a live _given survives as [null]."""
     rows = [{"resourceType": "Patient", "id": "p1",
              "name": [{"given": [None],
                        "_given": [{"extension": [
                            {"url": "http://x/enc", "valueCode": "masked"}]}]}]}]
-    df, back = _roundtrip(spark, rows, resource_type="Patient")
+    df, back = _roundtrip(tmp_path_factory, spark, rows, resource_type="Patient")
     assert back == rows
 
 
@@ -410,12 +409,12 @@ _CONTAINED_DOC = {
 }
 
 
-def test_contained_resources_roundtrip(spark):
+def test_contained_resources_roundtrip(spark, tmp_path_factory):
     """contained = sparse merged struct; annotations + lexical decimals
     apply inside it; decode regenerates each element sparsely."""
     # json.dumps would collapse 250.50 → 250.5; write the lexical text raw
     raw = json.dumps(_CONTAINED_DOC).replace("250.5", "250.50")
-    d = tempfile.mkdtemp(prefix="contained_")
+    d = str(tmp_path_factory.mktemp("contained"))
     with open(f"{d}/r.ndjson", "w") as f:
         f.write(raw + "\n")
     df = encode_ndjson(spark, d, resource_type="MedicationRequest")
@@ -431,10 +430,10 @@ def test_contained_resources_roundtrip(spark):
     assert "250.50" in txt
 
 
-def test_extract_contained(spark):
+def test_extract_contained(spark, tmp_path_factory):
     from parquet_on_fhir_spark.fhir.contained import extract_contained
 
-    path = _write_ndjson([_CONTAINED_DOC])
+    path = _write_ndjson(tmp_path_factory, [_CONTAINED_DOC])
     df = encode_ndjson(spark, path, resource_type="MedicationRequest")
     meds = extract_contained(df, "Medication")
     rows = meds.collect()
@@ -448,10 +447,10 @@ def test_extract_contained(spark):
     assert extract_contained(df, "Observation").count() == 0
 
 
-def test_resolve_local_reference(spark):
+def test_resolve_local_reference(spark, tmp_path_factory):
     from parquet_on_fhir_spark.fhir.contained import resolve_local_reference
 
-    path = _write_ndjson([_CONTAINED_DOC])
+    path = _write_ndjson(tmp_path_factory, [_CONTAINED_DOC])
     df = encode_ndjson(spark, path, resource_type="MedicationRequest")
     r = resolve_local_reference(df, "medicationReference").collect()[0]
     assert r["medicationReference_resolved"]["id"] == "m1"
@@ -459,7 +458,7 @@ def test_resolve_local_reference(spark):
     # non-local / dangling → NULL
     doc2 = dict(_CONTAINED_DOC, id="mr2",
                 medicationReference={"reference": "Medication/external"})
-    path2 = _write_ndjson([_CONTAINED_DOC, doc2])
+    path2 = _write_ndjson(tmp_path_factory, [_CONTAINED_DOC, doc2])
     df2 = encode_ndjson(spark, path2, resource_type="MedicationRequest")
     got = {r["id"]: r["medicationReference_resolved"]
            for r in resolve_local_reference(df2, "medicationReference").collect()}
@@ -587,11 +586,9 @@ def test_concept_closure_and_isa_filter(spark):
     }
 
 
-def test_unbundle_ndjson_splits_and_preserves_decimals(spark):
+def test_unbundle_ndjson_splits_and_preserves_decimals(spark, tmp_path_factory):
     """Bundle NDJSON → per-type tables through the raw-subtree
     extraction; lexical decimals inside entries survive to re-decode."""
-    import tempfile as _tf
-
     from parquet_on_fhir_spark.fhir.encode import unbundle_ndjson
     from parquet_on_fhir_spark.fhir.decode import to_fhir_json
 
@@ -611,8 +608,8 @@ def test_unbundle_ndjson_splits_and_preserves_decimals(spark):
             ],
         }).replace('"__V__"', value)
 
-    src = _tf.mkdtemp(prefix="pofs_bundle_src_")
-    out = _tf.mkdtemp(prefix="pofs_bundle_out_")
+    src = str(tmp_path_factory.mktemp("pofs_bundle_src"))
+    out = str(tmp_path_factory.mktemp("pofs_bundle_out"))
     with open(f"{src}/bundles.ndjson", "w") as fh:
         fh.write(bundle("p1", "o1", "72.50") + "\n")
         fh.write(bundle("p2", "o2", "98.6") + "\n")

@@ -5,7 +5,6 @@ dates, choice variants, and nested extensions must regenerate exactly
 
 import pytest
 import json
-import tempfile
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -76,9 +75,9 @@ def patients(draw, i):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.data())
-def test_random_sparse_patients_roundtrip(spark, data):
+def test_random_sparse_patients_roundtrip(spark, tmp_path_factory, data):
     rows = [data.draw(patients(i)) for i in range(data.draw(st.integers(1, 6)))]
-    d = tempfile.mkdtemp(prefix="fhir_fuzz_")
+    d = str(tmp_path_factory.mktemp("fhir_fuzz"))
     with open(f"{d}/p.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
@@ -110,11 +109,11 @@ decimal_tokens = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.data())
-def test_quantity_decimal_lexical_roundtrip(spark, data):
+def test_quantity_decimal_lexical_roundtrip(spark, tmp_path_factory, data):
     """valueQuantity.value regenerates with its exact lexical text —
     including trailing zeros and >double precision — as a JSON number."""
     toks = [data.draw(decimal_tokens) for _ in range(data.draw(st.integers(1, 5)))]
-    d = tempfile.mkdtemp(prefix="fhir_fuzz_dec_")
+    d = str(tmp_path_factory.mktemp("fhir_fuzz_dec"))
     with open(f"{d}/o.ndjson", "w") as f:
         for i, tok in enumerate(toks):
             # raw line assembly: json.dumps would normalize the number
@@ -138,7 +137,7 @@ def test_quantity_decimal_lexical_roundtrip(spark, data):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.data())
-def test_paired_primitive_array_roundtrip(spark, data):
+def test_paired_primitive_array_roundtrip(spark, tmp_path_factory, data):
     """given/_given index alignment survives arbitrary null placements
     (at least one live element per array)."""
     n = data.draw(st.integers(1, 4))
@@ -156,7 +155,7 @@ def test_paired_primitive_array_roundtrip(spark, data):
             given[i] = "Fill"
     rows = [{"resourceType": "Patient", "id": "p0",
              "name": [{"given": given, "_given": under}]}]
-    d = tempfile.mkdtemp(prefix="fhir_fuzz_pair_")
+    d = str(tmp_path_factory.mktemp("fhir_fuzz_pair"))
     with open(f"{d}/p.ndjson", "w") as f:
         f.write(json.dumps(rows[0]) + "\n")
     df = encode_ndjson(spark, d, resource_type="Patient")
@@ -221,7 +220,7 @@ def registry_docs(draw, i):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.data())
-def test_random_registry_tier_roundtrip(spark, data):
+def test_random_registry_tier_roundtrip(spark, tmp_path_factory, data):
     import collections
 
     rows = [data.draw(registry_docs(i)) for i in range(data.draw(st.integers(1, 5)))]
@@ -229,7 +228,7 @@ def test_random_registry_tier_roundtrip(spark, data):
     for r in rows:
         by_type[r["resourceType"]].append(r)
     for rtype, docs in by_type.items():
-        d = tempfile.mkdtemp(prefix="fhir_fuzz_r6_")
+        d = str(tmp_path_factory.mktemp("fhir_fuzz_r6"))
         with open(f"{d}/r.ndjson", "w") as f:
             for doc in docs:
                 f.write(json.dumps(doc) + "\n")

@@ -5,9 +5,24 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_on_fhir_spark.operators import graph as G
 from parquet_on_fhir_spark.operators.dedup import near_dup_clusters
 from parquet_on_fhir_spark.operators.graph import connected_components
 from parquet_on_fhir_spark.operators.text import chunk_documents
+
+#: connected_components' two paths: union-find on the driver at the
+#: default gate, the distributed fixpoint with the gate at 0
+_GATES = {"driver": G._BROADCAST_MAX_ROWS, "distributed": 0}
+
+
+def _both_paths(fn):
+    """``fn()`` once per connected-components path, as {path: result}."""
+    out = {}
+    for path, gate in _GATES.items():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(G, "_BROADCAST_MAX_ROWS", gate)
+            out[path] = fn()
+    return out
 
 
 def _uf_components(edges):
@@ -33,11 +48,14 @@ def _uf_components(edges):
 
 def _check(spark, edges):
     df = spark.createDataFrame(edges, "src: long, dst: long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, "src", "dst").collect()
-    }
-    assert got == _uf_components(edges)
+    got = _both_paths(
+        lambda: {
+            r["node"]: r["component"]
+            for r in connected_components(df, "src", "dst").collect()
+        }
+    )
+    want = _uf_components(edges)
+    assert got == {"driver": want, "distributed": want}
 
 
 def test_cc_chain_and_island(spark):
@@ -122,11 +140,11 @@ def test_chunking_is_map_only(spark, sf_dir):
     assert "Exchange" not in plan, plan
 
 
-def test_cc_raises_on_round_budget(spark):
+def test_cc_raises_on_round_budget(spark, monkeypatch):
     """A long chain cannot converge in 2 rounds: the guard must raise
-    rather than return a partially-propagated labelling."""
-    import pytest
-
+    rather than return a partially-propagated labelling. Only the
+    distributed path has rounds, so the gate is forced to 0."""
+    monkeypatch.setattr(G, "_BROADCAST_MAX_ROWS", 0)
     edges = [(i, i + 1) for i in range(60)]
     df = spark.createDataFrame(edges, "src: long, dst: long")
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -175,7 +193,10 @@ def _raise_k_core(spark):
 
 def _raise_cc(spark):
     df = spark.createDataFrame(_chain(60), "src long, dst long")
-    connected_components(df, "src", "dst", max_iter=2)
+    # only the distributed path has rounds to run out of
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(G, "_BROADCAST_MAX_ROWS", 0)
+        connected_components(df, "src", "dst", max_iter=2)
 
 
 def _raise_cc_contract(spark):
@@ -327,11 +348,62 @@ def test_near_dup_clusters_pair_and_singleton(spark):
         (3, "completely different text about spark query engines at scale"),
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    out = near_dup_clusters(
-        df, "text", "doc_id", num_bands=16, jaccard_threshold=0.3
-    ).collect()
-    comp = {r["doc_id"]: r["component"] for r in out}
-    assert comp[1] == comp[2] == 1 and comp[3] == 3
+    got = _both_paths(
+        lambda: {
+            r["doc_id"]: r["component"]
+            for r in near_dup_clusters(
+                df, "text", "doc_id", num_bands=16, jaccard_threshold=0.3
+            ).collect()
+        }
+    )
+    assert got["driver"] == got["distributed"] == {1: 1, 2: 1, 3: 3}
+
+
+def test_cc_null_endpoints(spark):
+    """A NULL endpoint is its own node labelled NULL and joins nothing;
+    the other end keeps its own label (both paths, as the fixpoint
+    always did)."""
+    df = spark.createDataFrame(
+        [(7, None), (None, None), (1, 2)], "src long, dst long"
+    )
+    got = _both_paths(
+        lambda: sorted(
+            connected_components(df).collect(), key=lambda r: (r[0] is None, r)
+        )
+    )
+    want = [(1, 1), (2, 1), (7, 7), (None, None)]
+    assert [tuple(r) for r in got["driver"]] == want
+    assert [tuple(r) for r in got["distributed"]] == want
+
+
+def test_cc_rejects_non_numeric_ids(spark, count_jobs):
+    """String ids raise one TypeError from the schema on both paths,
+    before any job (they used to fail inside the witness job with
+    CAST_INVALID_INPUT)."""
+    df = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    for gate in _GATES.values():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(G, "_BROADCAST_MAX_ROWS", gate)
+            err, jobs = count_jobs(
+                lambda: pytest.raises(TypeError, connected_components, df)
+            )
+        err.match("'src' is string, not numeric")
+        assert jobs == 0
+
+
+def test_near_dup_clusters_job_count(spark, count_jobs):
+    """The small pair graph is labelled on the driver: 8 jobs on every
+    call (the distributed fixpoint's rounds made it 24)."""
+    rows = [(i, f"alpha beta gamma delta epsilon zeta {i % 4}") for i in range(24)]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    for _ in range(2):
+        _, jobs = count_jobs(
+            lambda: near_dup_clusters(
+                df, "text", "doc_id", num_hashes=16, num_bands=4,
+                jaccard_threshold=0.3,
+            )
+        )
+        assert jobs == 8
 
 
 def test_connected_components_empty_edges(spark):
@@ -425,10 +497,6 @@ def test_triangle_count_big_graph_branch_agrees(spark, monkeypatch):
     """The >1M-edge wedge-join branch (r16: small graphs count by
     adjacency intersection instead) must produce identical per-node
     counts — force it by zeroing the gate and compare strategies."""
-    import random
-
-    from parquet_on_fhir_spark.operators import graph as G
-
     rng = random.Random(11)
     edges = set()
     while len(edges) < 200:
@@ -446,7 +514,6 @@ def test_pagerank_big_graph_branch_agrees(spark, monkeypatch):
     """The >1M-node shuffle-join pagerank branch (r16: small graphs
     broadcast the rank/contribution tables) must produce identical
     ranks — IEEE-identical, since only the join strategy changes."""
-    from parquet_on_fhir_spark.operators import graph as G
 
     edges = [(i, (i * 7) % 23) for i in range(23)] + [(3, 9), (9, 3), (4, 4)]
     df = spark.createDataFrame(edges, "src int, dst int")
@@ -459,7 +526,6 @@ def test_pagerank_big_graph_branch_agrees(spark, monkeypatch):
 def test_near_dup_clusters_shuffle_join_branch_agrees(spark, monkeypatch):
     """near_dup_clusters broadcasts the label table only under the
     gate (r16); the shuffle-join branch must yield the same clusters."""
-    from parquet_on_fhir_spark.operators import graph as G
     from parquet_on_fhir_spark.operators.dedup import near_dup_clusters
 
     rows = [(i, f"alpha beta gamma delta epsilon zeta {i % 4}") for i in range(24)]

@@ -3,7 +3,6 @@
 import io
 import json
 import contextlib
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -11,7 +10,7 @@ from parquet_on_fhir_spark.fhir.encode import encode_ndjson
 from parquet_on_fhir_spark.fhir.table import FhirTable
 
 
-def _patients(spark):
+def _patients(tmp_path_factory, spark):
     rows = [
         {"resourceType": "Patient", "id": "a", "birthDate": "1959"},
         {"resourceType": "Patient", "id": "b", "birthDate": "1960-05"},
@@ -19,7 +18,7 @@ def _patients(spark):
         {"resourceType": "Patient", "id": "d", "birthDate": "1975-01-01"},
         {"resourceType": "Patient", "id": "e"},
     ]
-    d = tempfile.mkdtemp(prefix="rw_")
+    d = str(tmp_path_factory.mktemp("rw"))
     with open(f"{d}/p.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
@@ -30,8 +29,8 @@ def _ids(t):
     return sorted(r.id for r in t.df.select("id").collect())
 
 
-def test_date_predicate_semantics(spark):
-    t = FhirTable.from_df(_patients(spark))
+def test_date_predicate_semantics(spark, tmp_path_factory):
+    t = FhirTable.from_df(_patients(tmp_path_factory, spark))
     # ge '1960': element interval ends at/after 1960-01-01
     assert _ids(t.where_date("birthDate", "ge", "1960")) == ["b", "c", "d"]
     # lt '1960': starts before 1960
@@ -47,7 +46,7 @@ def test_date_predicate_semantics(spark):
     assert "e" not in _ids(t.where_date("birthDate", "le", "2100"))
 
 
-def test_decimal_and_quantity_predicates(spark):
+def test_decimal_and_quantity_predicates(spark, tmp_path_factory):
     rows = [
         {"resourceType": "Observation", "id": "o1",
          "valueQuantity": {"value": 36.5, "unit": "C", "code": "Cel",
@@ -56,7 +55,7 @@ def test_decimal_and_quantity_predicates(spark):
          "valueQuantity": {"value": 103.1, "unit": "F", "code": "[degF]",
                            "system": "http://unitsofmeasure.org"}},
     ]
-    d = tempfile.mkdtemp(prefix="rwq_")
+    d = str(tmp_path_factory.mktemp("rwq"))
     with open(f"{d}/o.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
@@ -69,9 +68,9 @@ def test_decimal_and_quantity_predicates(spark):
     assert _ids(warm) == ["o1", "o2"]
 
 
-def test_rewrite_pushes_down_to_parquet_scan(spark):
-    df = _patients(spark)
-    d = tempfile.mkdtemp(prefix="rwpq_")
+def test_rewrite_pushes_down_to_parquet_scan(spark, tmp_path_factory):
+    df = _patients(tmp_path_factory, spark)
+    d = str(tmp_path_factory.mktemp("rwpq"))
     df.write.mode("overwrite").parquet(d)
     t = FhirTable.read(spark, d).where_date("birthDate", "ge", "1960")
     buf = io.StringIO()
@@ -82,13 +81,13 @@ def test_rewrite_pushes_down_to_parquet_scan(spark):
     assert pushed and "__birthDate_end" in pushed[0], pushed
 
 
-def test_flatten(spark):
+def test_flatten(spark, tmp_path_factory):
     rows = [
         {"resourceType": "Patient", "id": "p1",
          "name": [{"family": "A"}, {"family": "B"}]},
         {"resourceType": "Patient", "id": "p2", "name": [{"family": "C"}]},
     ]
-    d = tempfile.mkdtemp(prefix="rwf_")
+    d = str(tmp_path_factory.mktemp("rwf"))
     with open(f"{d}/p.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
@@ -100,8 +99,8 @@ def test_flatten(spark):
     assert got == [("p1", "A"), ("p1", "B"), ("p2", "C")]
 
 
-def test_search_string_frontend(spark):
-    t = FhirTable.from_df(_patients(spark))
+def test_search_string_frontend(spark, tmp_path_factory):
+    t = FhirTable.from_df(_patients(tmp_path_factory, spark))
     assert _ids(t.search("birthDate=ge1960")) == ["b", "c", "d"]
     assert _ids(t.search("birthDate=ge1960&birthDate=lt1975")) == ["b", "c"]
     assert _ids(t.search("id=a")) == ["a"]
@@ -115,7 +114,7 @@ def test_search_string_frontend(spark):
          "valueQuantity": {"value": 103.1, "unit": "F", "code": "[degF]",
                            "system": "http://unitsofmeasure.org"}},
     ]
-    d = tempfile.mkdtemp(prefix="search_")
+    d = str(tmp_path_factory.mktemp("search"))
     with open(f"{d}/o.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")

@@ -3,7 +3,6 @@ config — SNAPPY, dictionary encoding, min/max statistics (SURVEY.md §0,
 BASELINE.md example-data anchor) — plus extension-depth spill behavior."""
 
 import json
-import tempfile
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -18,9 +17,9 @@ def _one_part(path):
     return sorted(glob.glob(f"{path}/part-*.parquet"))[0]
 
 
-def test_sink_footer_matches_reference_config(spark):
+def test_sink_footer_matches_reference_config(spark, tmp_path_factory):
     p = spark.read.parquet("/root/reference/examples/Patient.parquet")
-    out = tempfile.mkdtemp(prefix="sinkconf_")
+    out = str(tmp_path_factory.mktemp("sinkconf"))
     write_table(p, out)
     pf = pq.ParquetFile(_one_part(out))
     md = pf.metadata
@@ -37,11 +36,11 @@ def test_sink_footer_matches_reference_config(spark):
     assert "DICTIONARY" in str(gender.encodings), gender.encodings
 
 
-def test_int96_timestamp_write(spark):
+def test_int96_timestamp_write(spark, tmp_path_factory):
     df = spark.createDataFrame(
         [("a",)], "id string"
     ).select("id", F.lit("2020-01-02").cast("timestamp").alias("ts"))
-    out = tempfile.mkdtemp(prefix="int96_")
+    out = str(tmp_path_factory.mktemp("int96"))
     write_table(df, out, int96_timestamps=True)
     sch = pq.read_schema(_one_part(out))
     # pyarrow surfaces parquet INT96 as timestamp[ns]
@@ -50,7 +49,7 @@ def test_int96_timestamp_write(spark):
     assert str(back.collect()[0].ts) == "2020-01-02 00:00:00"
 
 
-def test_extension_depth_spill(spark):
+def test_extension_depth_spill(spark, tmp_path_factory):
     rows = [
         {
             "resourceType": "Patient",
@@ -70,7 +69,7 @@ def test_extension_depth_spill(spark):
             ],
         }
     ]
-    d = tempfile.mkdtemp(prefix="spill_")
+    d = str(tmp_path_factory.mktemp("spill"))
     with open(f"{d}/p.ndjson", "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")

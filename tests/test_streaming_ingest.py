@@ -3,7 +3,6 @@ run-to-completion batches, exactly-once incremental append, quarantine."""
 
 import pytest
 import json
-import tempfile
 
 from parquet_on_fhir_spark.fhir.decode import to_fhir_json
 from parquet_on_fhir_spark.streaming.fhir_ingest import stream_encode_ndjson
@@ -35,8 +34,8 @@ def _docs_out(spark, out):
 
 
 @pytest.mark.slow
-def test_stream_encode_available_now_and_incremental(spark):
-    base = tempfile.mkdtemp(prefix="ingest_")
+def test_stream_encode_available_now_and_incremental(spark, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("ingest"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     import os
 
@@ -65,8 +64,8 @@ def test_stream_encode_available_now_and_incremental(spark):
     assert "__birthDate_start" in schema.fieldNames()
 
 
-def test_stream_encode_quarantine(spark):
-    base = tempfile.mkdtemp(prefix="ingest_q_")
+def test_stream_encode_quarantine(spark, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("ingest_q"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     import os
 
@@ -88,13 +87,11 @@ def test_stream_encode_quarantine(spark):
     assert good[0]["id"] == "p1"
 
 
-def test_map_only_curation_ops_compose_with_streams(spark, sf_dir):
+def test_map_only_curation_ops_compose_with_streams(spark, tmp_path_factory, sf_dir):
     """chunk_documents / quality_score / split_corpus are pure map
     expressions, so the SAME calls run unchanged on a readStream — the
     streaming corpus-prep path needs no parallel implementations.  The
     AvailableNow result must equal the batch application row-for-row."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from parquet_on_fhir_spark.api import load_table
@@ -103,7 +100,7 @@ def test_map_only_curation_ops_compose_with_streams(spark, sf_dir):
     from parquet_on_fhir_spark.streaming.jobs import run_to_memory
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="pofs_curation_stream_")
+    src = str(tmp_path_factory.mktemp("pofs_curation_stream"))
     d.coalesce(2).write.mode("overwrite").parquet(src)
 
     def prep(df):
@@ -123,13 +120,12 @@ def test_map_only_curation_ops_compose_with_streams(spark, sf_dir):
     assert batch.exceptAll(got).count() == 0
 
 
-def test_streaming_incremental_dedup_foreachbatch(spark, sf_dir):
+def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path_factory, sf_dir):
     """Continuous-ingestion loop: each micro-batch is deduped against
     the base corpus PLUS everything previously accepted (foreachBatch
     reads its own sink), so a fresh doc arriving twice across batches is
     accepted exactly once and near/exact dups of the base never land."""
     import os
-    import tempfile
     import time as _time
 
     from pyspark.sql import functions as F
@@ -156,7 +152,7 @@ def test_streaming_incremental_dedup_foreachbatch(spark, sf_dir):
          (4000002, "zq gamma unseen ingest words three qz")],
         "doc_id long, text string",
     )
-    src = tempfile.mkdtemp(prefix="pofs_ingest_dedup_")
+    src = str(tmp_path_factory.mktemp("pofs_ingest_dedup"))
     near.unionAll(fresh1).coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
     exact.unionAll(fresh2).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
     # FileStreamSource orders micro-batches by file mtime; pin distinct
@@ -167,7 +163,7 @@ def test_streaming_incremental_dedup_foreachbatch(spark, sf_dir):
         for root, _dirs, files in os.walk(f"{src}/{sub}"):
             for fn in files:
                 os.utime(os.path.join(root, fn), (ts, ts))
-    accepted_dir = tempfile.mkdtemp(prefix="pofs_accepted_") + "/out"
+    accepted_dir = str(tmp_path_factory.mktemp("pofs_accepted")) + "/out"
 
     def ingest(batch_df, batch_id):
         base = kept
@@ -176,7 +172,7 @@ def test_streaming_incremental_dedup_foreachbatch(spark, sf_dir):
         ok = incremental_dedup(batch_df, base, "text", "doc_id", jaccard_threshold=0.4)
         ok.write.mode("append").parquet(accepted_dir)
 
-    ck = tempfile.mkdtemp(prefix="pofs_ingest_ck_")
+    ck = str(tmp_path_factory.mktemp("pofs_ingest_ck"))
     q = (
         spark.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", 1)

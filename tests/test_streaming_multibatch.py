@@ -4,7 +4,6 @@ per trigger (maxFilesPerTrigger=1) so the pipeline genuinely runs
 several micro-batches."""
 
 import pytest
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -13,12 +12,12 @@ from parquet_on_fhir_spark.api import load_table
 from parquet_on_fhir_spark.streaming.stateful import running_user_totals
 
 
-def _three_batch_source(spark, sf_dir):
+def _three_batch_source(tmp_path_factory, spark, sf_dir):
     """events split into 3 files with increasing mtimes → 3 micro-batches."""
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    src = tempfile.mkdtemp(prefix="mb_src_")
+    src = str(tmp_path_factory.mktemp("mb_src"))
     for i, (lo, hi) in enumerate([(0, 300), (300, 600), (600, 10**9)]):
         part = e.filter(
             (F.col("event_id") >= lo) & (F.col("event_id") < hi)
@@ -37,8 +36,8 @@ def _stream(spark, src_glob, schema):
     )
 
 
-def _run(df, mode, name, ck=None):
-    ck = ck or tempfile.mkdtemp(prefix="mb_ck_")
+def _run(tmp_path_factory, df, mode, name, ck=None):
+    ck = ck or str(tmp_path_factory.mktemp("mb_ck"))
     q = (
         df.writeStream.outputMode(mode)
         .format("memory")
@@ -51,12 +50,12 @@ def _run(df, mode, name, ck=None):
     return ck
 
 
-def test_stateful_totals_accumulate_across_batches(spark, sf_dir):
-    e, src, paths = _three_batch_source(spark, sf_dir)
+def test_stateful_totals_accumulate_across_batches(spark, tmp_path_factory, sf_dir):
+    e, src, paths = _three_batch_source(tmp_path_factory, spark, sf_dir)
     schema = e.schema
     s = _stream(spark, f"{src}/b*", schema)
     out = running_user_totals(s)
-    _run(out, "update", "mb_state")
+    _run(tmp_path_factory, out, "update", "mb_state")
     sink = spark.table("mb_state")
     # several micro-batches → users emit multiple running updates
     assert sink.count() > sink.select("user_id").distinct().count()
@@ -71,30 +70,30 @@ def test_stateful_totals_accumulate_across_batches(spark, sf_dir):
     assert diff == 0
 
 
-def test_streaming_dedup_spans_batches(spark, sf_dir):
-    e, src, paths = _three_batch_source(spark, sf_dir)
+def test_streaming_dedup_spans_batches(spark, tmp_path_factory, sf_dir):
+    e, src, paths = _three_batch_source(tmp_path_factory, spark, sf_dir)
     s = _stream(spark, f"{src}/b*", e.schema)
     dedup = s.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    _run(dedup, "append", "mb_dedup")
+    _run(tmp_path_factory, dedup, "append", "mb_dedup")
     got = spark.table("mb_dedup")
     expect = e.select("user_id", "event_type").distinct()
     assert got.count() == expect.count()
     assert got.exceptAll(expect).count() == 0
 
 
-def test_checkpoint_reuse_is_idempotent(spark, sf_dir):
-    e, src, paths = _three_batch_source(spark, sf_dir)
+def test_checkpoint_reuse_is_idempotent(spark, tmp_path_factory, sf_dir):
+    e, src, paths = _three_batch_source(tmp_path_factory, spark, sf_dir)
     s = _stream(spark, f"{src}/b*", e.schema)
     agg = s.groupBy("event_type").agg(F.count("*").alias("n"))
-    ck = _run(agg, "complete", "mb_idem1")
+    ck = _run(tmp_path_factory, agg, "complete", "mb_idem1")
     first = {r.event_type: r.n for r in spark.table("mb_idem1").collect()}
     # re-run against the SAME checkpoint and source: no new data → the
     # restarted query must not double-count
     s2 = _stream(spark, f"{src}/b*", e.schema)
     agg2 = s2.groupBy("event_type").agg(F.count("*").alias("n"))
-    _run(agg2, "complete", "mb_idem2", ck=ck)
+    _run(tmp_path_factory, agg2, "complete", "mb_idem2", ck=ck)
     second = {r.event_type: r.n for r in spark.table("mb_idem2").collect()}
     truth = {
         r.event_type: r.n
@@ -105,11 +104,11 @@ def test_checkpoint_reuse_is_idempotent(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_watermark_drops_late_data(spark):
+def test_watermark_drops_late_data(spark, tmp_path_factory):
     """Run 1 processes recent data and advances the watermark (persisted
     in the checkpoint); run 2 (same checkpoint) sees only too-late rows,
     which must be dropped — their window never emits with late counts."""
-    src = tempfile.mkdtemp(prefix="wm_src_")
+    src = str(tmp_path_factory.mktemp("wm_src"))
     schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT"
     recent = spark.createDataFrame(
         [(i, f"2024-01-10 12:{i:02d}:00", 1) for i in range(10)],
@@ -128,8 +127,8 @@ def test_watermark_drops_late_data(spark):
             .agg(F.count("*").alias("n"))
         )
 
-    out = tempfile.mkdtemp(prefix="wm_out_")
-    ck = tempfile.mkdtemp(prefix="wm_ck_")
+    out = str(tmp_path_factory.mktemp("wm_out"))
+    ck = str(tmp_path_factory.mktemp("wm_ck"))
 
     def run_to_files(stream):
         q = (
@@ -184,17 +183,16 @@ def test_watermark_drops_late_data(spark):
     assert emitted.get("2024-01-10 09:00:00", 0) == 0
 
 
-def test_session_window_merges_across_batches(spark, sf_dir):
+def test_session_window_merges_across_batches(spark, tmp_path_factory, sf_dir):
     """Streaming session windows must MERGE sessions that span
     micro-batch boundaries: an event in batch 2 that lands within 30 min
     of a batch-1 session extends that session rather than opening a new
     one. Events are split by time (not id) so every user's session tail
     crosses the batch boundary; the final complete-mode result must equal
     the batch session_window over the union."""
-    e, src, paths = _three_batch_source(spark, sf_dir)
+    e, src, paths = _three_batch_source(tmp_path_factory, spark, sf_dir)
     # time-split: re-write 3 files partitioned by event time thirds
-    import tempfile as _tf
-    src2 = _tf.mkdtemp(prefix="mb_sess_")
+    src2 = str(tmp_path_factory.mktemp("mb_sess"))
     bounds = e.select(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).first()
@@ -218,7 +216,7 @@ def test_session_window_merges_across_batches(spark, sf_dir):
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    _run(agg, "complete", "mb_sessions")
+    _run(tmp_path_factory, agg, "complete", "mb_sessions")
     got = spark.table("mb_sessions").select(
         "user_id", F.col("session_window.start").alias("s"), "n"
     )
@@ -232,7 +230,7 @@ def test_session_window_merges_across_batches(spark, sf_dir):
     assert expected.exceptAll(got).count() == 0
 
 
-def test_stream_events_multibatch_replays_n_ordered_batches(spark, sf_dir):
+def test_stream_events_multibatch_replays_n_ordered_batches(spark, tmp_path_factory, sf_dir):
     """q56b's source contract: the staged split must replay as (at
     least) n_files non-empty micro-batches, in event-time order, with no
     rows lost — otherwise the 'multi-batch watermark' query would be
@@ -248,7 +246,7 @@ def test_stream_events_multibatch_replays_n_ordered_batches(spark, sf_dir):
         ).first()
         seen.append((batch_id, row.n, row.lo, row.hi))
 
-    ck = tempfile.mkdtemp(prefix="mbq_ck_")
+    ck = str(tmp_path_factory.mktemp("mbq_ck"))
     q = (
         s.writeStream.foreachBatch(record)
         .option("checkpointLocation", ck)
@@ -265,7 +263,7 @@ def test_stream_events_multibatch_replays_n_ordered_batches(spark, sf_dir):
         assert hi <= lo
 
 
-def test_streaming_cdc_apply_matches_global_fold(spark, sf_dir):
+def test_streaming_cdc_apply_matches_global_fold(spark, tmp_path_factory, sf_dir):
     """The CDC merge loop over N micro-batches must land on exactly the
     state a single batch fold over ALL changes produces — per-key latest
     wins across batch boundaries, and keys whose latest change is a
@@ -288,7 +286,7 @@ def test_streaming_cdc_apply_matches_global_fold(spark, sf_dir):
             (F.col("event_type") == "error").alias("is_delete"),
         )
 
-    target = tempfile.mkdtemp(prefix="pofs_cdc_target_")
+    target = str(tmp_path_factory.mktemp("pofs_cdc_target"))
     try:
         stream = shape(stream_events_multibatch(spark, sf_dir, n_files=4))
         stream_apply_cdc(
@@ -312,7 +310,7 @@ def test_streaming_cdc_apply_matches_global_fold(spark, sf_dir):
         shutil.rmtree(target, ignore_errors=True)
 
 
-def test_cdc_batch_replay_is_idempotent(spark):
+def test_cdc_batch_replay_is_idempotent(spark, tmp_path_factory):
     """Replaying the same batch_id (foreachBatch's retry contract) must
     leave the published table unchanged."""
     import shutil
@@ -322,7 +320,7 @@ def test_cdc_batch_replay_is_idempotent(spark):
         read_cdc_table,
     )
 
-    target = tempfile.mkdtemp(prefix="pofs_cdc_target_")
+    target = str(tmp_path_factory.mktemp("pofs_cdc_target"))
     try:
         b0 = spark.createDataFrame(
             [(1, 10, "a", False), (2, 11, "b", False)],
@@ -343,7 +341,7 @@ def test_cdc_batch_replay_is_idempotent(spark):
         shutil.rmtree(target, ignore_errors=True)
 
 
-def test_cdc_schema_drift_raises(spark):
+def test_cdc_schema_drift_raises(spark, tmp_path_factory):
     """A batch whose columns differ from the published table must fail,
     not silently drop or null-fill a column in the merged table."""
     import shutil
@@ -353,7 +351,7 @@ def test_cdc_schema_drift_raises(spark):
         read_cdc_table,
     )
 
-    target = tempfile.mkdtemp(prefix="pofs_cdc_target_")
+    target = str(tmp_path_factory.mktemp("pofs_cdc_target"))
     try:
         b0 = spark.createDataFrame(
             [(1, 10, "a", False)], "k int, seq int, v string, del boolean"
@@ -370,7 +368,7 @@ def test_cdc_schema_drift_raises(spark):
         shutil.rmtree(target, ignore_errors=True)
 
 
-def test_cdc_retention_prunes_old_versions(spark):
+def test_cdc_retention_prunes_old_versions(spark, tmp_path_factory):
     import os
     import shutil
 
@@ -379,7 +377,7 @@ def test_cdc_retention_prunes_old_versions(spark):
         read_cdc_table,
     )
 
-    target = tempfile.mkdtemp(prefix="pofs_cdc_target_")
+    target = str(tmp_path_factory.mktemp("pofs_cdc_target"))
     try:
         for bid in range(4):
             b = spark.createDataFrame(

@@ -3,7 +3,6 @@ hl7.org/fhir/uv/sql-on-fhir; golden inputs are the reference's example
 files plus pinned synthetic docs."""
 
 import json
-import tempfile
 
 import pytest
 from pyspark.sql import types as T
@@ -15,8 +14,8 @@ PATIENT = "/root/reference/examples/Patient.parquet"
 OBSERVATION = "/root/reference/examples/Observation.parquet"
 
 
-def _encode(spark, docs, rtype, **kw):
-    d = tempfile.mkdtemp(prefix="views_")
+def _encode(tmp_path_factory, spark, docs, rtype, **kw):
+    d = str(tmp_path_factory.mktemp("views"))
     with open(f"{d}/r.ndjson", "w") as f:
         for doc in docs:
             f.write(json.dumps(doc) + "\n")
@@ -37,13 +36,13 @@ def test_basic_columns_and_resource_key(spark):
     assert out.filter("patient_id IS NULL").count() == 0
 
 
-def test_for_each_explodes_and_drops_empty(spark):
+def test_for_each_explodes_and_drops_empty(spark, tmp_path_factory):
     docs = [
         {"resourceType": "Patient", "id": "a",
          "name": [{"family": "X"}, {"family": "Y"}]},
         {"resourceType": "Patient", "id": "b"},  # no name
     ]
-    df = _encode(spark, docs, "Patient")
+    df = _encode(tmp_path_factory, spark, docs, "Patient")
     view = {"resource": "Patient", "select": [
         {"column": [{"name": "pid", "path": "id"}]},
         {"forEach": "name", "column": [{"name": "family", "path": "family"}]},
@@ -133,13 +132,13 @@ def test_arithmetic_in_paths(spark):
             {"name": "bad", "path": "category.coding.code + 1"}]}]})
 
 
-def test_exists_empty_count_first(spark):
+def test_exists_empty_count_first(spark, tmp_path_factory):
     docs = [
         {"resourceType": "Patient", "id": "a",
          "name": [{"given": ["J", "K"]}], "active": True},
         {"resourceType": "Patient", "id": "b", "active": False},
     ]
-    df = _encode(spark, docs, "Patient")
+    df = _encode(tmp_path_factory, spark, docs, "Patient")
     out = {r.pid: r for r in run_view(df, {
         "resource": "Patient",
         "select": [{"column": [
@@ -195,11 +194,11 @@ def test_constants(spark):
     assert run_view(p, view).count() == 100
 
 
-def test_union_all(spark):
+def test_union_all(spark, tmp_path_factory):
     docs = [{"resourceType": "Patient", "id": "a",
              "name": [{"family": "X"}],
              "contact": [{"name": {"family": "C1"}}]}]
-    df = _encode(spark, docs, "Patient")
+    df = _encode(tmp_path_factory, spark, docs, "Patient")
     view = {"resource": "Patient", "select": [
         {"column": [{"name": "pid", "path": "id"}]},
         {"unionAll": [
@@ -212,9 +211,9 @@ def test_union_all(spark):
     assert got == {("a", "X"), ("a", "C1")}
 
 
-def test_boundary_functions_use_annotations(spark):
+def test_boundary_functions_use_annotations(spark, tmp_path_factory):
     docs = [{"resourceType": "Patient", "id": "a", "birthDate": "1970-03"}]
-    df = _encode(spark, docs, "Patient")  # annotations=True default
+    df = _encode(tmp_path_factory, spark, docs, "Patient")  # annotations=True default
     out = run_view(df, {"resource": "Patient", "select": [{"column": [
         {"name": "lo", "path": "birthDate.lowBoundary()"},
         {"name": "hi", "path": "birthDate.highBoundary()"},
@@ -222,7 +221,7 @@ def test_boundary_functions_use_annotations(spark):
     assert str(out.lo).startswith("1970-03-01")
     assert str(out.hi).startswith("1970-03-31")
     # without annotations the path errors at compile time, not silently
-    df2 = _encode(spark, docs, "Patient", annotations=False)
+    df2 = _encode(tmp_path_factory, spark, docs, "Patient", annotations=False)
     with pytest.raises(ViewPathError, match="__birthDate_start"):
         run_view(df2, {"resource": "Patient", "select": [{"column": [
             {"name": "lo", "path": "birthDate.lowBoundary()"}]}]})
