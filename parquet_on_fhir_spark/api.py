@@ -9,10 +9,13 @@ scan either way.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLES = (
     "region",
@@ -31,47 +34,98 @@ TABLES = (
 # (region=5, nation=25 rows always; supplier/part grow slowly).
 BROADCAST_DIMS = ("region", "nation", "supplier", "part")
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table as a DataFrame (lazy; scan-level pruning applies).
 
-    Tolerates parquet TIMESTAMP(NANOS) columns (which Spark's reader
-    rejects): falls back to reading nanos as LongType and converts to
-    microsecond timestamps JVM-side (`div 1000` — integer division, no
-    double roundtrip, matching DuckDB's nanos→micros truncation).
+    The schema comes from the Parquet footer (:func:`footer_schema`), so
+    opening a table starts no Spark job. TIMESTAMP(NANOS) columns, which
+    Spark's reader rejects, load as bigint under ``nanosAsLong`` and are
+    converted to microsecond timestamps JVM-side (``div 1000``: integer
+    division, no double round trip, matching DuckDB's nanos→micros
+    truncation). A path whose footers disagree or cannot be read falls
+    back to Spark's own schema inference.
     """
     path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_columns(path)
-    if not ns_cols:
+    found = footer_schema(path)
+    if found is None:
         return spark.read.parquet(path)
-    # Only files WITHOUT embedded Spark schema metadata need the fallback:
-    # Spark reads its own nanos writes fine, but rejects foreign
-    # TIMESTAMP(NANOS) unless nanosAsLong is on (then they load as bigint).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    dtypes = dict(df.dtypes)
+    schema, ns_cols = found
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
-        if dtypes.get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 
-def _nanos_columns(path: str) -> tuple[str, ...]:
-    """Names of TIMESTAMP(NANOS) columns in a parquet file/dir: a pyarrow
-    footer read on every call (under 2 ms per table at sf0.1), so no
-    process-global state says what unit a path held earlier."""
+def footer_schema(path: str) -> tuple[StructType, tuple[str, ...]] | None:
+    """The Spark schema of a Parquet file or directory and the names of
+    its TIMESTAMP(NANOS) columns, from pyarrow footer reads on the
+    driver (one per part file; under 2 ms per table at sf0.1) instead
+    of Spark's schema-inference job.
+
+    Files written by Spark carry their schema under
+    ``org.apache.spark.sql.parquet.row.metadata``, which Spark's own
+    inference uses as is, so this does too (Spark writes no nanos
+    column). Other files map through ``from_arrow_type`` the way Spark's
+    inference types them: timezone-naive timestamps become
+    ``timestamp_ntz`` and nanos columns ``bigint`` (``nanosAsLong``).
+    Partition columns are not in a footer; Spark still discovers them
+    from the directory names.
+
+    ``None`` when the part files do not all carry the same schema, a
+    footer cannot be read or mapped, or a non-Spark file holds INT96:
+    the caller lets Spark infer.
+    """
     import pyarrow as pa
     import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
     try:
-        schema = ds.dataset(path, format="parquet").schema
-    except Exception:
-        return ()
-    return tuple(
-        f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        dataset = ds.dataset(path, format="parquet")
+        fs = dataset.filesystem
+        metas = [pq.read_metadata(f, filesystem=fs) for f in dataset.files]
+    except (OSError, pa.ArrowException):
+        return None
+    if not metas:
+        return None
+    arrow = metas[0].schema.to_arrow_schema()
+    spark_json = (metas[0].metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if any(
+        (m.metadata or {}).get(_SPARK_SCHEMA_KEY) != spark_json
+        or not m.schema.to_arrow_schema().equals(arrow)
+        for m in metas[1:]
+    ):
+        return None
+    if spark_json is not None:
+        try:
+            return StructType.fromJson(json.loads(spark_json)), ()
+        except ValueError:  # a pre-JSON Spark schema string
+            return None
+    if any(c.physical_type == "INT96" for c in metas[0].schema):
+        return None  # Spark infers an LTZ timestamp, pyarrow naive nanos
+    nanos = tuple(
+        f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
     )
+    try:
+        fields = [
+            StructField(
+                f.name,
+                LongType()
+                if f.name in nanos
+                else from_arrow_type(f.type, prefer_timestamp_ntz=True),
+                f.nullable,
+            )
+            for f in arrow
+        ]
+    except TypeError:  # an Arrow type with no Spark counterpart
+        return None
+    return StructType(fields), nanos
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_on_fhir_spark.api import footer_schema
 from parquet_on_fhir_spark.fhir.annotations import annotate
 from parquet_on_fhir_spark.plans.rewrite import (
     date_predicate,
@@ -29,6 +30,13 @@ class FhirTable:
     # --- construction -------------------------------------------------
     @classmethod
     def read(cls, spark: SparkSession, path: str, merge_schema: bool = True) -> "FhirTable":
+        """Open a table with the schema its part files' footers carry
+        (no Spark job). Part files written with different schemas, say
+        by appends across a schema change, go through Spark's
+        ``mergeSchema`` inference instead."""
+        found = footer_schema(path)
+        if found is not None:
+            return cls(spark.read.schema(found[0]).parquet(path))
         reader = spark.read.option("mergeSchema", str(merge_schema).lower())
         return cls(reader.parquet(path))
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parquet_on_fhir_spark.operators.graph import fixpoint
+from parquet_on_fhir_spark.session import local_rows_df
 
 
 @contextmanager
@@ -218,8 +219,10 @@ def concept_designations(codesystems: DataFrame) -> DataFrame:
         if lvl is not None:
             out = lvl if out is None else out.unionByName(lvl)
     if out is None:
-        return codesystems.sparkSession.createDataFrame(
-            [], "system string, code string, language string, value string"
+        return local_rows_df(
+            codesystems.sparkSession,
+            [],
+            "system string, code string, language string, value string",
         )
     return out
 
@@ -244,8 +247,8 @@ def concept_edges(codesystems: DataFrame) -> DataFrame:
         edges = lvl if edges is None else edges.unionByName(lvl)
         cur = nxt.select("system", "c")
     if edges is None:
-        return codesystems.sparkSession.createDataFrame(
-            [], "system string, parent string, child string"
+        return local_rows_df(
+            codesystems.sparkSession, [], "system string, parent string, child string"
         )
     return edges
 
@@ -729,8 +732,10 @@ def expand_valueset(
         # requested urls absent from the context (e.g. an unknown
         # ^ refset token against a reference-bearing table): empty
         # membership, not an error — the member-of contract
-        return valuesets.sparkSession.createDataFrame(
-            [], "url string, system string, code string, display string"
+        return local_rows_df(
+            valuesets.sparkSession,
+            [],
+            "url string, system string, code string, display string",
         )
     out = out_parts[0]
     for p in out_parts[1:]:
@@ -1189,7 +1194,8 @@ def _expand_compose(
             # cross-reference intersection is empty — mixed includes
             # intersect to nothing and pure-ref includes contribute
             # nothing (the documented member-of contract).
-            ref_exp = valuesets.sparkSession.createDataFrame(
+            ref_exp = local_rows_df(
+                valuesets.sparkSession,
                 [],
                 "__ref string, system string, code string, display string",
             )
@@ -2123,8 +2129,8 @@ def _concept_properties(codesystems: DataFrame) -> DataFrame:
 
 def _concept_properties_build(codesystems: DataFrame) -> DataFrame:
     spark = codesystems.sparkSession
-    empty = spark.createDataFrame(
-        [], "system string, code string, prop string, pval string, grp int"
+    empty = local_rows_df(
+        spark, [], "system string, code string, prop string, pval string, grp int"
     )
     # NOTE: property may appear at ANY concept nesting depth (a child
     # concept can carry properties its parents lack — the encoded

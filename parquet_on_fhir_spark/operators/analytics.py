@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from parquet_on_fhir_spark.session import local_rows_df
+
 
 def funnel(
     events: DataFrame,
@@ -1249,8 +1251,8 @@ def frequency_sketch_topk(
     item_type = df.schema[item_col].dataType.simpleString()
     if sk_row["sk"] is None:
         # empty / all-NULL input: count_min_sketch aggregates to NULL
-        return spark.createDataFrame(
-            [], f"item {item_type}, n bigint, n_est bigint, rank int"
+        return local_rows_df(
+            spark, [], f"item {item_type}, n bigint, n_est bigint, rank int"
         )
     sketch = _cms_parse(bytes(sk_row["sk"]))
     # estimate keys come from the SAME cast('string') rendering the
@@ -1263,7 +1265,7 @@ def frequency_sketch_topk(
         ).collect()
     ]
     est = [(it, _cms_estimate(sketch, s)) for it, s in items]
-    est_df = spark.createDataFrame(est, f"item {item_type}, n_est long")
+    est_df = local_rows_df(spark, est, f"item {item_type}, n_est long")
     return top.join(F.broadcast(est_df), "item").select(
         "item", "n", "n_est", "rank"
     )
@@ -1722,9 +1724,7 @@ def linear_regression_fit(
     r2 = float(1.0 - ss_res / ss_tot) if ss_tot > 0 else float("nan")
     out = [(name, float(b)) for name, b in zip(names, beta)]
     out.append(("__r2__", r2))
-    return df.sparkSession.createDataFrame(
-        out, "feature string, coefficient double"
-    )
+    return local_rows_df(df.sparkSession, out, "feature string, coefficient double")
 
 
 def nelson_aalen(
@@ -2838,9 +2838,7 @@ def logistic_regression_fit(
     out = [(name, float(b)) for name, b in zip(names, beta)]
     out.append(("__log_likelihood__", float(ll)))
     out.append(("__n_iter__", float(it_done)))
-    return df.sparkSession.createDataFrame(
-        out, "feature string, coefficient double"
-    )
+    return local_rows_df(df.sparkSession, out, "feature string, coefficient double")
 
 
 def population_stability_index(
@@ -3760,8 +3758,8 @@ def cox_ph(
         ("__log_partial_likelihood__", loglik, None),
         ("__n_iter__", float(it_done), None),
     ]
-    return spark.createDataFrame(
-        rows, "feature string, coefficient double, hazard_ratio double"
+    return local_rows_df(
+        spark, rows, "feature string, coefficient double, hazard_ratio double"
     )
 
 

@@ -22,6 +22,8 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parquet_on_fhir_spark.session import local_rows_df
+
 _log = logging.getLogger(__name__)
 
 #: Default per-bucket row cap for LSH band joins. A band self-join costs
@@ -491,7 +493,8 @@ def embedding_near_dup_pairs(
                 from pyspark.sql import types as T
 
                 id_t = df.schema[id_col].dataType
-                return df.sparkSession.createDataFrame(
+                return local_rows_df(
+                    df.sparkSession,
                     [],
                     T.StructType(
                         [

@@ -49,6 +49,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, NumericType, StructField, StructType
 
+from parquet_on_fhir_spark.session import local_rows_df
+
 _log = logging.getLogger(__name__)
 
 
@@ -216,10 +218,7 @@ def _driver_components(
     ``collect()`` instead of a fixpoint of ~6 jobs per round (q108's
     142-node pair graph: 18 construction jobs -> 8). Every root is its
     component's smallest id, so the labels equal the fixpoint's. The
-    frame is built from a pyarrow Table: a Python-list frame is a
-    pickled RDD that Spark must unpickle in Python workers."""
-    import pyarrow as pa
-
+    labels go back as a ``LocalRelation`` (``local_rows_df``)."""
     parent: dict = {}
 
     def find(x):
@@ -242,13 +241,11 @@ def _driver_components(
         n_edges,
         len(parent),
     )
-    node = list(parent)
-    comp = [find(n) for n in node]  # NULL is its own root
     schema = StructType(
         [StructField("node", id_type), StructField("component", id_type)]
     )
-    table = pa.table({"node": node, "component": comp})
-    return ends.sparkSession.createDataFrame(table, schema), len(node)
+    labels = [(n, find(n)) for n in parent]  # NULL is its own root
+    return local_rows_df(ends.sparkSession, labels, schema), len(labels)
 
 
 def _canonical(e: DataFrame) -> DataFrame:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from parquet_on_fhir_spark.session import local_rows_df
+
 # Tiny per-language stopword marker sets for the n-gram/stopword-ratio
 # language heuristic. Real pipelines would use fastText/CLD3; the
 # heuristic keeps the operator dependency-free and demonstrates the
@@ -530,8 +532,8 @@ def schema_diff(df_a: "DataFrame", df_b: "DataFrame") -> "DataFrame":
             else "type_changed"
         )
         rows.append((name, ta, tb, status))
-    return spark.createDataFrame(
-        rows, "column string, type_a string, type_b string, status string"
+    return local_rows_df(
+        spark, rows, "column string, type_a string, type_b string, status string"
     )
 
 
@@ -995,7 +997,8 @@ def bpe_train_merges(
             F.regexp_replace("sym", pat, repl).alias("sym"), "freq"
         )
         vocab = vocab.localCheckpoint(eager=False)
-    return df.sparkSession.createDataFrame(
+    return local_rows_df(
+        df.sparkSession,
         merges,
         "round int, left string, right string, merged string, "
         "pair_count long",

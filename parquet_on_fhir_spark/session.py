@@ -99,21 +99,34 @@ def get_session(app_name: str = "parquet-on-fhir-spark") -> SparkSession:
     return builder.getOrCreate()
 
 
-def local_rows_df(spark: SparkSession, rows, schema, slices: int = 1):
-    """Small-literal DataFrame with a sane partition count (r16,
-    guide §4/§6). ``spark.createDataFrame(list)`` parallelizes the
-    rows over ``defaultParallelism`` partitions (32 on the local
-    session), and because the backing RDD holds PYTHON-pickled rows,
-    EVERY scan of the frame — each broadcast build, each action —
-    pays one Python-worker deserialization round-trip per partition:
-    ~0.5 s per scan for a 4-row frame, almost all of it empty-task
-    boundary cost (measured: 0.53 s → 0.26 s for a 4-row count at
-    ``slices=1``). Fixture/metadata frames are a handful of rows by
-    construction, so one slice is their right layout; pass a larger
-    ``slices`` only when the literal data is genuinely big."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema
+def local_rows_df(spark: SparkSession, rows, schema):
+    """A DataFrame over rows held on the driver, planned as a
+    ``LocalTableScan`` when small: no scan of it starts a Spark job or
+    a Python worker.
+
+    ``rows`` are tuples or ``Row``s in the column order of ``schema``,
+    a ``StructType`` or a DDL string. They reach the JVM as one Arrow
+    table, which Spark keeps as a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (64 MB by
+    default; above it, a JVM-side RDD of Arrow batches). The list or RDD
+    forms of ``createDataFrame`` give an RDD scan instead, and over a
+    Python RDD pyspark adds a ``map`` that runs in a Python worker on
+    every scan: each broadcast build and each action. q299's broadcast
+    of 150 WebP payloads paid 130-210 ms a call for that job. Naive
+    datetimes in a ``timestamp`` column are read as UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)],
+        schema=arrow,
     )
+    return spark.createDataFrame(table, struct)
 
 
 def utc(spark: SparkSession) -> SparkSession:

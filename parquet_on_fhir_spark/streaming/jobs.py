@@ -106,14 +106,15 @@ def _stage_parquet(path: str, dest: str) -> None:
 def _ts_micros_expr(path: str):
     """ts-normalization for a staged events file: the stream reads the
     raw INT64 (schema pins ts BIGINT) and converts JVM-side, because the
-    stored unit is a property of the WRITER — footer-sniffed per file
-    like the batch loader (api._nanos_columns), never assumed.  Nanos
+    stored unit is a property of the WRITER — footer-read per file like
+    the batch loader (api.footer_schema), never assumed.  Nanos
     divide (integer truncation, matching DuckDB); micros convert
     directly.  Either way the result is a TIMESTAMP (LTZ, UTC session)
     as withWatermark requires."""
-    from parquet_on_fhir_spark.api import _nanos_columns
+    from parquet_on_fhir_spark.api import footer_schema
 
-    if "ts" in _nanos_columns(path):
+    found = footer_schema(path)
+    if found is not None and "ts" in found[1]:
         return F.timestamp_micros(F.expr("ts div 1000"))
     return F.timestamp_micros(F.col("ts"))
 
